@@ -3,7 +3,8 @@ package graft.crawl
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import org.apache.spark.storage.StorageLevel
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.catalyst.InternalRow
 import graft.functions.{Funcs, GoUrl}
 
 /** Crawl configuration — reference defaults cited in BASELINE.md. */
@@ -64,6 +65,12 @@ final case class CrawlConfig(
   * a host can contribute at most floor(window/delay) rows per wave — so the
   * fetch stage is skew-immune by construction; the enqueue anti-joins rely
   * on AQE skew handling.
+  *
+  * Driver cost: a wave is bound by Spark job latency, not compute, so it
+  * materializes each intermediate once, takes its counts from the jobs
+  * that materialize them, and writes all table deltas in one job — 42 jobs
+  * and 2 parquet writes per wave on the 112-host scale crawl. Every
+  * job is tagged `wave <w> <phase>`; `runWave` lists the phases.
   */
 /** Static query shapes shared by the wave loop and its plan-shape specs. */
 object Scheduler {
@@ -87,6 +94,8 @@ object Scheduler {
     * `cand.join(seen.withColumnRenamed("url","dst"), Seq("dst"),
     * "left_anti")`, with all other `cand` columns carried through. */
   private[graft] def hashProbeNewUrls(cand: DataFrame, seen: DataFrame): DataFrame = {
+    require(!cand.columns.contains("uh_"),
+      "hashProbeNewUrls: the candidate frame already has a uh_ column, which the probe would overwrite")
     val c = cand.withColumn("uh_", xxhash64(col("dst")))
     val sh = seen.select(xxhash64(col("url")).as("uh_"), col("url"))
     val hashNovel = c.join(sh.select("uh_"), Seq("uh_"), "left_anti")
@@ -101,10 +110,6 @@ object Scheduler {
 
 final class Scheduler(spark: SparkSession, store: TableStore, cfg: CrawlConfig) {
 
-  /** Live seen-bloom shard dir as of this instance's last committed wave —
-    * the wave loop's fast path around re-reading the one-row
-    * seen_bloom_meta table (see runWave's bloomDir resolution). */
-  @volatile private var bloomDirCache: Option[String] = None
   import spark.implicits._
   import Model._
 
@@ -112,23 +117,17 @@ final class Scheduler(spark: SparkSession, store: TableStore, cfg: CrawlConfig) 
   private val EnqueueOffset = 1L << 24 // response-derived enqueues sort after next wave's seeds
   private val baseEpochSec: Long = Model.VirtualEpoch.getTime / 1000L
 
-  /** Concurrent job submission for a wave's INDEPENDENT actions (the staged
-    * table writes, the final materializations, the stat counts). A wave is
-    * dominated by driver-side job latency, not compute — each action is one
-    * round trip through the scheduler — so independent actions submit from
-    * a small thread pool (the standard Spark multi-job driver pattern;
-    * shared persisted frames are safe, the BlockManager serializes
-    * first-computation per block). Failures propagate: any action throwing
-    * fails the wave before commitWave publishes. */
+  /** The wave pool: a wave's INDEPENDENT actions (the concurrent
+    * materializations, the delta plans' shuffle stages, the seen-bloom
+    * merge) submit from here. A wave is dominated by driver-side job
+    * latency, not compute — each action is one round trip through the
+    * scheduler — so independent actions overlap (the standard Spark
+    * multi-job driver pattern; shared materialized frames are safe, the
+    * BlockManager serializes first-computation per block). Failures
+    * propagate: any action throwing fails the wave before commitWave
+    * publishes. */
   private val waveExec = java.util.concurrent.Executors.newFixedThreadPool(12,
     (r: Runnable) => { val t = new Thread(r, "wave-par"); t.setDaemon(true); t })
-
-  private def par[T](thunks: Seq[() => T]): Seq[T] = {
-    import scala.jdk.CollectionConverters._
-    val futures = waveExec.invokeAll(
-      thunks.map(t => new java.util.concurrent.Callable[T] { def call(): T = t() }).asJava)
-    futures.asScala.map(_.get()).toSeq // get() rethrows the first failure
-  }
 
   private def vtTs(vtCol: Column): Column = timestamp_seconds(lit(baseEpochSec) + floor(vtCol))
 
@@ -431,25 +430,139 @@ final class Scheduler(spark: SparkSession, store: TableStore, cfg: CrawlConfig) 
   private def perShardItems: Long =
     math.max(64L, cfg.bloomExpectedItems / cfg.bloomShards)
 
+  /** Store name of the seen-bloom shard dirs (a `stageDir` state). */
+  private val BloomDir = "seen_bloom"
+
+  /** Rows per output file of a staged delta: a wave's deltas are usually a
+    * few thousand rows, and one file per small delta keeps the write to
+    * one task and two files (data + checksum) instead of one per shuffle
+    * partition. */
+  private val RowsPerFile = 1L << 16
+
+  private def filesFor(rows: Long): Int =
+    math.max(1L, (rows + RowsPerFile - 1) / RowsPerFile).toInt
+
+  private def long(m: Map[String, Any], key: String): Long = m.get(key) match {
+    case Some(v: Long) => v
+    case _ => 0L
+  }
+
+  private def ints(m: Map[String, Any], key: String): Seq[Int] = m.get(key) match {
+    case Some(v: scala.collection.Seq[_]) => v.map(_.asInstanceOf[Int]).toSeq
+    case _ => Nil
+  }
+
+  /** Run `body` with the description of every job it submits from this
+    * thread set to `desc` (a thread-local Spark property). */
+  private def tagged[T](desc: String)(body: => T): T = {
+    val sc = spark.sparkContext
+    val prev = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(desc)
+    try body finally sc.setJobDescription(prev)
+  }
+
+  /** Observed aggregates of the url buckets an array column of urls
+    * touches, as bitmasks: mask i has bit b set when bucket 64·i + b is
+    * touched. A set of at most `urlBuckets` values, whatever the row count. */
+  private def hrefBucketMasks: Seq[Column] =
+    (0 until (cfg.urlBuckets + 63) / 64).map { i =>
+      bit_or(aggregate($"hrefs", lit(0L), (acc, u) => {
+        val b = bucketCol(u) - 64 * i
+        acc.bitwiseOR(when(b >= 0 && b < 64, call_function("shiftleft", lit(1L), b))
+          .otherwise(lit(0L)))
+      })).as(s"href_mask_$i")
+    }
+
+  private def maskedBuckets(m: Map[String, Any]): Seq[Int] =
+    (0 until (cfg.urlBuckets + 63) / 64).flatMap { i =>
+      val mask = long(m, s"href_mask_$i")
+      (0 until 64).filter(b => ((mask >>> b) & 1L) == 1L).map(_ + 64 * i)
+    }
+
+  /** One wave's job tags and materializations. Every job the wave submits
+    * carries the description `wave <w> <phase>` (a thread-local property,
+    * set on the calling thread and inside each pool thunk). Every frame
+    * the wave checkpoints is recorded here and exactly those RDDs are freed
+    * when the wave ends — never a cache another caller made meanwhile. */
+  private final class Wave(val w: Long) {
+    private val sc = spark.sparkContext
+    private val owned = new java.util.concurrent.ConcurrentLinkedQueue[RDD[_]]()
+
+    private def description: String = sc.getLocalProperty("spark.job.description")
+
+    def phase[T](name: String)(body: => T): T = tagged(s"wave $w $name")(body)
+
+    /** Run `body` on the wave pool under the calling thread's tag: pool
+      * threads copy local properties only when they are created, so each
+      * task sets its own. */
+    def async[T](body: => T): java.util.concurrent.Future[T] = {
+      val desc = description
+      waveExec.submit(new java.util.concurrent.Callable[T] {
+        def call(): T = {
+          sc.setJobDescription(desc)
+          try body finally sc.setJobDescription(null)
+        }
+      })
+    }
+
+    /** Independent thunks, concurrently; waits for all, then rethrows the
+      * first failure. */
+    def par[T](thunks: Seq[() => T]): Seq[T] =
+      thunks.map(t => async(t())).map(f => scala.util.Try(f.get())).map(_.get)
+
+    /** Local-checkpoint `df` (its shuffle stages plus one job) and return
+      * the aggregates `metrics` observed by that same job, by name. */
+    def materialize(name: String, df: DataFrame,
+        metrics: Column*): (DataFrame, Map[String, Any]) = {
+      val obs = new org.apache.spark.sql.Observation(s"wave${w}_$name")
+      val ck = (if (metrics.isEmpty) df
+        else df.observe(obs, metrics.head, metrics.tail: _*)).localCheckpoint()
+      ck.queryExecution.logical.foreach {
+        case l: org.apache.spark.sql.execution.LogicalRDD => owned.add(l.rdd)
+        case _ => ()
+      }
+      (ck, if (metrics.isEmpty) Map.empty else obs.get)
+    }
+
+    def release(): Unit = owned.forEach(r => try r.unpersist(blocking = false)
+      catch { case _: Throwable => () })
+  }
+
+  /** One crawl wave. Its Spark work, by phase (each job is tagged
+    * `wave <w> <phase>`):
+    *
+    *   - frontier: the committed frontier log's ONE scan per wave,
+    *     materialized; the same job counts the queued rows.
+    *   - views: table views; a table's first read after a new version
+    *     infers its schema from a footer (one job).
+    *   - bloom: the seen-bloom dir comes from the manifest and its geometry
+    *     file — no job unless it must be rebuilt.
+    *   - seeding (seed waves only): the full urls view, the whitelist, the
+    *     seeds and the new source url rows.
+    *   - host_plan: per-(host,lane) plan incl. robots fetches,
+    *     materialized; its job also yields the minimum positive delay and
+    *     the queued total.
+    *   - fetch: budget, robots gate, page join, parse and link extraction
+    *     in one materialization; its job counts takes, oks, blocks and
+    *     links, and collects the url buckets the takes and links touch.
+    *   - urls_wave (steady-state waves): the bucket-pruned urls slice.
+    *   - url_delta: the wave's urls delta (creates + updates).
+    *   - stage_writes: every table delta in ONE write job, concurrently
+    *     with the seen-bloom merge.
+    *   - lineage: one small write of per-file row counts.
+    *
+    * Materializations: 5 on a steady-state wave, 8 on a seed wave; parquet
+    * writes: 2. On the 112-host scale crawl a wave runs 42 jobs; a refill
+    * seed wave (queue under lowWatermark, with history) runs about 50. */
   def runWave(w: Long): WaveStats = {
     store.resetPending()
-    // phase marks (diagnostic, GRAFT_WAVE_DEBUG): driver-latency profile of
-    // one wave — each mark is the wall time since the previous eager point
-    val waveDebug = sys.env.contains("GRAFT_WAVE_DEBUG")
-    var lastMarkNs = System.nanoTime()
-    def mark(label: String): Unit = if (waveDebug) {
-      val now = System.nanoTime()
-      System.err.println(f"[wavephase] $w $label ${(now - lastMarkNs) / 1e9}%.2fs")
-      lastMarkNs = now
-    }
-    // persistent-RDD watermark: everything this wave persists or
-    // localCheckpoints below is freed at wave end. DataFrame.unpersist()
-    // covers the persist() frames but NOT localCheckpoint blocks (they live
-    // as plain RDD blocks outside the CacheManager and otherwise wait for a
-    // driver GC + ContextCleaner pass — on a large driver heap that can be
-    // never, and the blocks accumulate across waves and runs: measured as a
-    // 3x wall-time drift over three back-to-back fixture crawls in one JVM)
-    val rddsBefore = spark.sparkContext.getPersistentRDDs.keySet
+    val wave = new Wave(w)
+    try waveBody(wave) finally wave.release()
+  }
+
+  private def waveBody(wave: Wave): WaveStats = {
+    import wave.{materialize, phase}
+    val w = wave.w
     val waveStart = w * cfg.waveWindowSec
     val waveEnd = (w + 1) * cfg.waveWindowSec
     val nowSec = baseEpochSec + waveStart.toLong
@@ -457,328 +570,260 @@ final class Scheduler(spark: SparkSession, store: TableStore, cfg: CrawlConfig) 
     val staleBefore = nowSec - cfg.staleDurationSec
 
     // ONE frontier-log scan + latest-wins shuffle per wave: the MOR view is
-    // materialized here and every consumer below (queue gauge, budget slice,
-    // seed anti-join, active-url set) reads the checkpointed frame. Without
-    // this each consumer's action re-ran the full-log window — ×3 full
-    // shuffles per wave at a 10^10-row backlog (round-3 finding #1).
-    val frontier0 = frontierDF.localCheckpoint()
-    val uncrawl0 = uncrawlablesView.select("url")
-    val hostState0 = hostStateDF
-
-    // URL-seen sharded bloom (A9): the committed shard-file dir; a resume
-    // from a pre-bloom snapshot rebuilds shards from the urls table — the
-    // documented restart path (SURVEY §7.4.6). The driver never holds a
-    // filter object — shards live as files, loaded lazily per executor.
-    // The persisted geometry (shards, per-shard items, fpp) is validated
-    // against cfg: probing with mismatched parameters hashes urls to the
-    // wrong shard / wrong bit positions — silent false negatives that
-    // re-create seen urls — so a mismatch (e.g. GRAFT_SHARDS changed
-    // between runs) forces a rebuild from the urls table instead.
-    def rebuildBloom(): Option[String] = {
-      val dir = s"${store.rootPath}/seen_bloom/rebuild-v$w"
-      ShardedBloom.buildToDir(spark, urlsView.select("url"), "url",
-        cfg.bloomShards, perShardItems, cfg.bloomFpp, dir)
-      Some(dir)
+    // materialized here and every consumer below (budget slice, seed
+    // anti-join, active-url set) reads the checkpointed frame. Without this
+    // each consumer's action re-ran the full-log window — ×3 full shuffles
+    // per wave at a 10^10-row backlog (round-3 finding #1).
+    val (frontier0, queuedCount) = phase("frontier") {
+      val (f, m) = materialize("frontier", frontierDF,
+        count(when($"state" === StateQueued, 1)).as("queued")) // A10 gauge
+      (f, long(m, "queued"))
     }
-    val bloomDir: Option[String] =
+    // table views: a table's first read in this instance (or after a
+    // rewrite) infers its schema from a footer, which is a job
+    val (uncrawl0, hostState0, pages) = phase("views") {
+      (uncrawlablesView.select("url"), hostStateDF, pagesDF)
+    }
+
+    // URL-seen sharded bloom (A9): the manifest names the live shard dir and
+    // the dir's geometry file is validated against cfg on EVERY wave:
+    // probing with mismatched parameters hashes urls to the wrong shard /
+    // wrong bit positions — silent false negatives that re-create seen
+    // urls. A mismatch (e.g. GRAFT_SHARDS changed between runs), a pruned
+    // dir (resume from an old snapshot) or a pre-bloom store rebuilds the
+    // shards from the urls table — the documented restart path (SURVEY
+    // §7.4.6). The driver never holds a filter object.
+    val bloomDir: Option[String] = phase("bloom") {
       if (!cfg.useBloomPrefilter) None
-      // fast path: the dir this instance's PREVIOUS wave published (and
-      // whose geometry is cfg's own by construction). Nothing else writes
-      // seen_bloom_meta — seedUrl/markUncrawlable/compactTables don't touch
-      // it — so re-reading the one-row manifest table (a parquet open + a
-      // head() job) every wave only re-derived this field. A fresh instance
-      // (resume) still takes the validated read below.
-      else if (bloomDirCache.exists(d =>
-          java.nio.file.Files.isDirectory(java.nio.file.Paths.get(d))))
-        bloomDirCache
-      else store.readLatest("seen_bloom_meta") match {
-        case Some(df) =>
-          val cols = df.columns.toSet
-          val row = df.head()
-          val geometryOk =
-            cols.contains("shards") && row.getAs[Int]("shards") == cfg.bloomShards &&
-            cols.contains("per_shard_items") &&
-              row.getAs[Long]("per_shard_items") == perShardItems &&
-            cols.contains("fpp") && row.getAs[Double]("fpp") == cfg.bloomFpp
-          // dir existence: a resume from an old snapshot may reference a
-          // shard dir that post-commit pruning has since deleted — rebuild
-          // from the urls table (the same path a pre-bloom snapshot takes)
-          val dirOk = geometryOk && java.nio.file.Files.isDirectory(
-            java.nio.file.Paths.get(row.getAs[String]("dir")))
-          if (dirOk) Some(row.getAs[String]("dir")) else rebuildBloom()
-        case None if store.exists("urls") => rebuildBloom()
-        case None => None
-      }
-    mark("bloom_meta")
-    val queuedCount = frontier0.filter($"state" === StateQueued).count() // A10 gauge
-    mark("frontier_ck+gauge")
+      else store.committedDir(BloomDir)
+        .filter(d => ShardedBloom.geometry(spark, d)
+          .contains((cfg.bloomShards, perShardItems, cfg.bloomFpp)))
+        .orElse(if (!store.exists("urls")) None else {
+          val dir = store.stageDir(BloomDir)
+          ShardedBloom.buildToDir(spark, urlsView.select("url"), "url",
+            cfg.bloomShards, perShardItems, cfg.bloomFpp, dir)
+          Some(dir)
+        })
+    }
 
     // ---- 1. seeding (crawler.go:139-153)
     val doSeed = w == 0 || queuedCount < cfg.lowWatermark
     val seedUrlCount = if (w == 0) cfg.seedUrlsInit else cfg.seedUrlsRefill
     // Full urls MOR view only on seed waves (seeding scans table-wide for
     // unfetched whitelisted urls); steady-state waves read only the hash
-    // buckets their keys touch (see urlsWave below). localCheckpoint
-    // truncates the logical plan: the reused intermediates otherwise re-nest
-    // (urlsEff appears 4x inside urlsAfter), exploding plan size.
-    val urlsSeedFull: DataFrame = if (doSeed) urlsView.localCheckpoint() else null
+    // buckets their keys touch (see urlsWave below).
+    val (urlsSeedFull, urlsFullRows, seedRows, seedCount, seedCreates, whitelist) =
+      if (doSeed) phase("seeding") {
+        val (urlsFull, um) = materialize("urls_full", urlsView, count(lit(1)).as("n"))
+        // qSourcesCrawling (queries.go:455-464): crawl=true AND deleted=false,
+        // order by created desc limit 200 (soft-deleted sources never seed, P9)
+        val srcSeeds = sourcesDF
+          .filter($"crawl" === true && !coalesce($"deleted", lit(false)))
+          .orderBy(desc("created"), asc("url")).limit(cfg.seedSourcesLimit)
+          .select(asUrlUdf($"url").as("s_url"),
+            row_number().over(Window.orderBy(desc("created"), asc("url"))).as("ord"))
+          .filter($"s_url".isNotNull)
+          .withColumn("kind", lit(0))
 
-    val (seedRows, seedCreates, whitelist) = if (doSeed) {
-      // qSourcesCrawling (queries.go:455-464): crawl=true AND deleted=false,
-      // order by created desc limit 200 (soft-deleted sources never seed, P9)
-      val srcSeeds = sourcesDF
-        .filter($"crawl" === true && !coalesce($"deleted", lit(false)))
-        .orderBy(desc("created"), asc("url")).limit(cfg.seedSourcesLimit)
-        .select(asUrlUdf($"url").as("s_url"),
-          row_number().over(Window.orderBy(desc("created"), asc("url"))).as("ord"))
-        .filter($"s_url".isNotNull)
-        .withColumn("kind", lit(0))
+        val (wl, _) = materialize("whitelist",
+          srcSeeds.select(Funcs.hostUdf($"s_url").as("host")).distinct())
 
-      val wl = srcSeeds.select(Funcs.hostUdf($"s_url").as("host")).distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      wl.count()
+        // quiescent mode gates source re-seeds on GET staleness so batch runs
+        // terminate (sentry re-fetches roots unconditionally forever, T7)
+        val srcSeedsGated =
+          if (cfg.quiescent && w > 0)
+            srcSeeds.join(
+              urlsFull.filter($"last_get".isNotNull &&
+                unix_timestamp($"last_get") >= staleBefore).select($"url".as("s_url")),
+              Seq("s_url"), "left_anti")
+          else srcSeeds
 
-      // quiescent mode gates source re-seeds on GET staleness so batch runs
-      // terminate (sentry re-fetches roots unconditionally forever, T7)
-      val srcSeedsGated =
-        if (cfg.quiescent && w > 0)
-          srcSeeds.join(
-            urlsSeedFull.filter($"last_get".isNotNull &&
-              unix_timestamp($"last_get") >= staleBefore).select($"url".as("s_url")),
+        // seedUrls (crawler.go:211-234): whitelisted unfetched, created desc
+        val unfetched = urlsFull.filter($"last_get".isNull)
+          .withColumn("host", Funcs.hostUdf($"url"))
+          .join(wl, Seq("host"), "left_semi")
+          .orderBy(desc("created"), asc("url")).limit(seedUrlCount)
+          .select($"url".as("s_url"),
+            row_number().over(Window.orderBy(desc("created"), asc("url"))).as("ord"))
+          .withColumn("kind", lit(1))
+
+        val allSeeds = srcSeedsGated.unionByName(unfetched)
+          .withColumn("rn_", row_number().over(Window.partitionBy($"s_url").orderBy($"kind", $"ord")))
+          .filter($"rn_" === 1)
+          // uncrawlables gate: manually-blocked urls never enter the frontier
+          .join(broadcast(uncrawl0.select($"url".as("s_url"))),
             Seq("s_url"), "left_anti")
-        else srcSeeds
+          .join(frontier0.select($"url".as("s_url")), Seq("s_url"), "left_anti") // enqued map
+          .withColumn("seq", lit(w * SeqStride) +
+            row_number().over(Window.orderBy($"kind", $"ord")).cast("long"))
+          .select($"s_url".as("url"), lit("GET").as("method"),
+            Funcs.hostUdf($"s_url").as("host"), lit("A").as("lane"),
+            lit(w).as("wave"), $"seq", lit(StateQueued).as("state"),
+            // seeds are stale-by-construction (unfetched, or past the
+            // staleness gate that quiescent mode applies) → max score
+            lit(NeverFetchedScore).as("prio_score"))
 
-      // seedUrls (crawler.go:211-234): whitelisted unfetched, created desc
-      val unfetched = urlsSeedFull.filter($"last_get".isNull)
-        .withColumn("host", Funcs.hostUdf($"url"))
-        .join(wl, Seq("host"), "left_semi")
-        .orderBy(desc("created"), asc("url")).limit(seedUrlCount)
-        .select($"url".as("s_url"),
-          row_number().over(Window.orderBy(desc("created"), asc("url"))).as("ord"))
-        .withColumn("kind", lit(1))
+        // AsUrl Read-or-Save: unseen source roots become url rows
+        val creates = srcSeedsGated.select($"s_url".as("url")).distinct()
+          .join(urlsFull.select("url"), Seq("url"), "left_anti")
+          .select(newUrlRowCols($"url", nowTs): _*)
 
-      val allSeeds = srcSeedsGated.unionByName(unfetched)
-        .withColumn("rn_", row_number().over(Window.partitionBy($"s_url").orderBy($"kind", $"ord")))
-        .filter($"rn_" === 1)
-        // uncrawlables gate: manually-blocked urls never enter the frontier
-        .join(broadcast(uncrawl0.select($"url".as("s_url"))),
-          Seq("s_url"), "left_anti")
-        .join(frontier0.select($"url".as("s_url")), Seq("s_url"), "left_anti") // enqued map
-        .withColumn("seq", lit(w * SeqStride) +
-          row_number().over(Window.orderBy($"kind", $"ord")).cast("long"))
-        .select($"s_url".as("url"), lit("GET").as("method"),
-          Funcs.hostUdf($"s_url").as("host"), lit("A").as("lane"),
-          lit(w).as("wave"), $"seq", lit(StateQueued).as("state"),
-          // seeds are stale-by-construction (unfetched, or past the
-          // staleness gate that quiescent mode applies) → max score
-          lit(NeverFetchedScore).as("prio_score"))
-
-      // AsUrl Read-or-Save: unseen source roots become url rows
-      val creates = srcSeedsGated.select($"s_url".as("url")).distinct()
-        .join(urlsSeedFull.select("url"), Seq("url"), "left_anti")
-        .select(newUrlRowCols($"url", nowTs): _*)
-
-      (allSeeds, creates, wl)
-    } else {
-      val wl = store.readLatest("whitelist").getOrElse(Seq.empty[String].toDF("host"))
-      (emptyFrontierDF, emptyUrlRows, wl)
-    }
-
-    // seeds are O(seed caps) rows; checkpoint truncates their lineage into
-    // the wave (the full-frontier materialization this replaces was the
-    // last O(state-size) write of the loop)
-    val seedRowsCk = if (doSeed) seedRows.localCheckpoint() else seedRows
-    mark("seeding")
+        // seeds and creates are O(seed caps) rows; checkpoints truncate
+        // their lineage into the wave
+        val Seq((seeds, sm), (createsCk, _)) = wave.par(Seq(
+          () => materialize("seeds", allSeeds, count(lit(1)).as("n")),
+          () => materialize("seed_creates", creates)))
+        (urlsFull, long(um, "n"), seeds, long(sm, "n"), createsCk, wl)
+      } else phase("views") {
+        val wl = store.readLatest("whitelist").getOrElse(Seq.empty[String].toDF("host"))
+        (null, 0L, emptyFrontierDF, 0L, emptyUrlRows, wl)
+      }
 
     // ---- 2. politeness budget + robots plan (T4/T5)
     // queued commands visible to this wave = committed queued transitions
     // (MOR view) + this wave's seeds (already anti-joined vs the frontier)
-    val queued = frontier0.filter($"state" === StateQueued).unionByName(seedRowsCk)
-    val pages = pagesDF
+    val queued = frontier0.filter($"state" === StateQueued).unionByName(seedRows)
 
     // one aggregation pass over the backlog yields depth AND the per-host
-    // queue head (first_url) — the only two per-host facts a wave needs
-    val hostsInPlay = queued.groupBy($"host", $"lane")
-      .agg(count(lit(1)).as("qdepth"), min_by($"url", $"seq").as("first_url"))
-      .join(hostState0, Seq("host", "lane"), "left")
-      .withColumn("robots_fetched", coalesce($"robots_fetched", lit(false)))
-      .withColumn("start_vt",
-        greatest(coalesce($"next_fetch_vt", lit(waveStart)), lit(waveStart)))
-
-    // first sight of a host prepends its robots.txt fetch (fetch.go:289-310)
-    val robotsFetched = hostsInPlay
-      .filter(lit(cfg.polite) && !$"robots_fetched" && $"start_vt" < waveEnd)
-      .withColumn("robots_url",
-        concat(coalesce(nullif(Funcs.schemeUdf($"first_url"), lit("")), lit("http")),
-          lit("://"), $"host", lit("/robots.txt")))
-      .join(pages.select($"url".as("robots_url"), $"html".as("robots_body")),
-        Seq("robots_url"), "left")
-      .withColumn("new_robots_txt",
-        when($"robots_body".isNotNull, decode($"robots_body", "UTF-8")).otherwise(lit("")))
-      .withColumn("delay_override", robotsDelayUdf($"new_robots_txt", lit(cfg.agent)))
-      .select($"host", $"lane", $"robots_url", $"new_robots_txt", $"delay_override",
-        $"start_vt".as("r_start"), $"robots_body".isNotNull.as("robots_found"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-
-    val hostPlan = hostsInPlay
-      .join(robotsFetched.select($"host", $"lane", $"new_robots_txt", $"delay_override"),
-        Seq("host", "lane"), "left")
-      .withColumn("robots_now", lit(cfg.polite) && !$"robots_fetched" && $"start_vt" < waveEnd)
-      .withColumn("eff_robots_txt",
-        when($"robots_now", $"new_robots_txt").otherwise(coalesce($"robots_txt", lit(""))))
-      .withColumn("eff_delay",
-        when($"robots_now" && $"delay_override".isNotNull, $"delay_override")
-          .otherwise(coalesce($"crawl_delay_sec", lit(cfg.crawlDelaySec))))
-      .select($"host", $"lane", $"robots_now", $"eff_robots_txt", $"eff_delay",
-        $"start_vt", $"qdepth")
-      // O(hosts-in-play) rows, referenced by the budget, the robots rejoin
-      // and the host-state update — cache instead of re-aggregating the
-      // queued backlog three times
-      .persist(StorageLevel.MEMORY_AND_DISK)
-
-    // per-host FIFO take under the politeness budget (fetch.go:345-425 +
-    // iq_slice). Only the queue head can survive the vt filter — at most
-    // ceil(window/min_delay) rows per (host,lane) — so a constant rank
-    // pre-filter lets Spark 4's WindowGroupLimit prune each host's backlog
-    // below the window exchange (a million-deep host contributes rankBound
-    // rows to the shuffle, not its whole queue), and the window ranks only
-    // narrow columns: robots bodies join back per-host AFTER the take.
-    // minDelay is one scalar agg over the per-host plan (rows = hosts in
-    // play), not over the backlog; the same pass yields the total queued
-    // depth (for the post-wave gauge) so the backlog is never re-scanned
-    // just to count it.
-    // rank bound from the smallest POSITIVE delay: zero-delay hosts are
-    // routed around the prune inside politeBudget (they take their whole
-    // backlog within the window), so one zero-delay robots line no longer
-    // disables WindowGroupLimit for every other host in the wave
-    // (round-3 finding: rankBound = Long.MaxValue globally)
-    val (minPosDelay: Double, queuedTotal: Long) = {
-      val r = hostPlan.agg(min(when($"eff_delay" > 0, $"eff_delay")),
-        sum($"qdepth")).head()
-      (if (r.isNullAt(0)) cfg.crawlDelaySec else r.getDouble(0),
-        if (r.isNullAt(1)) 0L else r.getLong(1))
+    // queue head (first_url) — the only two per-host facts a wave needs.
+    // First sight of a host prepends its robots.txt fetch (fetch.go:289-310):
+    // its robots url joins the page table here, so the plan carries both the
+    // effective robots text/delay and the robots fetch-log facts. The plan is
+    // O(hosts-in-play) rows, read by the budget, the robots rejoin, the
+    // host-state delta and the fetch log.
+    //
+    // Its job also yields the budget's rank bound: the smallest POSITIVE
+    // delay (zero-delay hosts are routed around the prune inside
+    // politeBudget — they take their whole backlog within the window — so
+    // one zero-delay robots line no longer disables WindowGroupLimit for
+    // every other host; round-3 finding), and the total queued depth for
+    // the post-wave gauge, so the backlog is never re-scanned to count it.
+    val (hostPlan, minPosDelay, queuedTotal, hostsInPlay) = phase("host_plan") {
+      val plan = queued.groupBy($"host", $"lane")
+        .agg(count(lit(1)).as("qdepth"), min_by($"url", $"seq").as("first_url"))
+        .join(hostState0, Seq("host", "lane"), "left")
+        .withColumn("robots_fetched", coalesce($"robots_fetched", lit(false)))
+        .withColumn("start_vt",
+          greatest(coalesce($"next_fetch_vt", lit(waveStart)), lit(waveStart)))
+        .withColumn("robots_now", lit(cfg.polite) && !$"robots_fetched" && $"start_vt" < waveEnd)
+        .withColumn("robots_url", when($"robots_now",
+          concat(coalesce(nullif(Funcs.schemeUdf($"first_url"), lit("")), lit("http")),
+            lit("://"), $"host", lit("/robots.txt"))))
+        .join(pages.select($"url".as("robots_url"), $"html".as("robots_body")),
+          Seq("robots_url"), "left")
+        .withColumn("new_robots_txt",
+          when($"robots_body".isNotNull, decode($"robots_body", "UTF-8")).otherwise(lit("")))
+        .withColumn("delay_override",
+          when($"robots_now", robotsDelayUdf($"new_robots_txt", lit(cfg.agent))))
+        .withColumn("eff_robots_txt",
+          when($"robots_now", $"new_robots_txt").otherwise(coalesce($"robots_txt", lit(""))))
+        .withColumn("eff_delay",
+          when($"robots_now" && $"delay_override".isNotNull, $"delay_override")
+            .otherwise(coalesce($"crawl_delay_sec", lit(cfg.crawlDelaySec))))
+        .select($"host", $"lane", $"robots_now", $"eff_robots_txt", $"eff_delay",
+          $"start_vt", $"qdepth", $"robots_url", $"robots_body".isNotNull.as("robots_found"))
+      val (hp, m) = materialize("host_plan", plan,
+        min(when($"eff_delay" > 0, $"eff_delay")).as("min_pos_delay"),
+        sum($"qdepth").as("queued"), count(lit(1)).as("hosts"))
+      val minPos = m.get("min_pos_delay") match {
+        case Some(d: Double) => d
+        case _ => cfg.crawlDelaySec
+      }
+      (hp, minPos, long(m, "queued"), long(m, "hosts"))
     }
     val rankBound: Long =
       math.ceil(cfg.waveWindowSec / math.max(minPosDelay, 1e-9)).toLong + 1
-    mark("host_plan")
-    val budgeted = politeBudget(queued, hostPlan, waveEnd, rankBound)
-      .persist(StorageLevel.MEMORY_AND_DISK)
 
-    // ---- 3. robots path gate (P8)
-    val gated = budgeted
-      .withColumn("path", Funcs.pathUdf($"url"))
-      .withColumn("allowed",
-        !lit(cfg.polite) || robotsAllowUdf($"eff_robots_txt", $"path", lit(cfg.agent)))
-    val disallowed = gated.filter(!$"allowed")
+    // ---- 3-6. per-host FIFO take under the politeness budget (fetch.go:345-425
+    // + iq_slice), robots path gate (P8), offline fetch against the page
+    // table (S6), the GET/HEAD response fields (P12 mux) and link extraction
+    // (F9: HandleGetResponse stores links for every doc GET in all lanes) —
+    // ONE materialization holding every taken command. The page body is
+    // parsed once (fused sniff/is_doc/title) and its links extracted in the
+    // same pass; the body itself is dropped before the checkpoint. The job
+    // also counts takes, ok fetches, blocked HEADs and links, and collects
+    // the url buckets the takes and the links' dsts touch.
+    val isGetOk = $"method" === "GET" && $"found"
+    val isHeadHtml = $"method" === "HEAD" && $"found" && $"ct_base" === "text/html"
+    val isHeadBlocked = $"method" === "HEAD" && $"found" && $"ct_base" =!= "text/html"
+    val (fetched, takenCount, okCount, blockedCount, linkCount, touchedBuckets) =
+      phase("fetch") {
+      val all = politeBudget(queued, hostPlan, waveEnd, rankBound)
+        .withColumn("allowed", !lit(cfg.polite) ||
+          robotsAllowUdf($"eff_robots_txt", Funcs.pathUdf($"url"), lit(cfg.agent)))
+        .drop("eff_robots_txt")
+        .join(pages.select($"url", $"html"), Seq("url"), "left")
+        .withColumn("found", $"allowed" && $"html".isNotNull)
+        .withColumn("body_len", when($"found", length($"html")).otherwise(lit(0)).cast("long"))
+        .withColumn("content_type",
+          when($"found", Funcs.contentTypeUdf($"url", $"html")).otherwise(lit("")))
+        .withColumn("ct_base", trim(split($"content_type", ";").getItem(0)))
+        .withColumn("resp_headers", array(lit("Content-Length"), $"body_len".cast("string"),
+          lit("Content-Type"), $"content_type"))
+        .withColumn("pp_", when(isGetOk, Funcs.pageParseUdf($"html")))
+        .withColumn("sniff", $"pp_._1")
+        .withColumn("is_doc", $"pp_._2")
+        .withColumn("title", $"pp_._3")
+        .drop("pp_")
+        .withColumn("file_name_new",
+          when(!$"is_doc" && !$"sniff".isin(sniffUnwanted: _*), fileNameCol($"url"))
+            .otherwise(lit(null)))
+        .withColumn("hrefs", when(isGetOk && $"is_doc", Funcs.extractLinksUdf($"url", $"html")))
+        .drop("html")
+      val (f, m) = materialize("fetch", all, Seq(count(lit(1)).as("taken"),
+        count(when($"found", 1)).as("ok"), count(when(isHeadBlocked, 1)).as("blocked"),
+        sum(size($"hrefs")).as("links"), collect_set(bucketCol($"url")).as("buckets")) ++
+        hrefBucketMasks: _*)
+      (f, long(m, "taken"), long(m, "ok"), long(m, "blocked"), long(m, "links"),
+        (ints(m, "buckets") ++ maskedBuckets(m)).distinct.sorted)
+    }
 
-    // ---- 4. offline fetch (S6): resolve against the page table
-    val fetched = gated.filter($"allowed")
-      .join(pages.select($"url", $"html"), Seq("url"), "left")
-      .withColumn("found", $"html".isNotNull)
-      .withColumn("body_len", when($"found", length($"html")).otherwise(lit(0)).cast("long"))
-      .withColumn("content_type",
-        when($"found", Funcs.contentTypeUdf($"url", $"html")).otherwise(lit("")))
-      .withColumn("ct_base", trim(split($"content_type", ";").getItem(0)))
-      .localCheckpoint()
-
-    mark("fetch_ck")
-    // ---- 5. response handlers (P12 mux)
-    val getOk = fetched.filter($"method" === "GET" && $"found")
-      // fused sniff/is_doc/title: one byte[] copy of the body per row
-      // instead of one per UDF (identical semantics to the separate calls)
-      .withColumn("pp_", Funcs.pageParseUdf($"html"))
-      .withColumn("sniff", $"pp_._1")
-      .withColumn("is_doc", $"pp_._2")
-      .withColumn("title", $"pp_._3")
-      .drop("pp_")
-      .withColumn("file_name_new",
-        when(!$"is_doc" && !$"sniff".isin(sniffUnwanted: _*), fileNameCol($"url"))
-          .otherwise(lit(null)))
-      .withColumn("resp_headers", array(lit("Content-Length"), $"body_len".cast("string"),
-        lit("Content-Type"), $"content_type"))
-      .localCheckpoint()
-
-    val headOk = fetched.filter($"method" === "HEAD" && $"found")
-    // only text/html HEAD responses have a handler (crawler.go:79-116)
-    val headHtml = headOk.filter($"ct_base" === "text/html")
-      .withColumn("resp_headers", array(lit("Content-Length"), $"body_len".cast("string"),
-        lit("Content-Type"), $"content_type"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // unmatched HEADs hit the no-op DefaultHandler and keep their enqued slot
-    // forever (handler.go:62-64) — blocked tombstones
-    val headBlockedRows = headOk.filter($"ct_base" =!= "text/html")
-      .select($"url", $"method", $"host", $"lane", $"wave", $"seq",
-        lit(StateBlocked).as("state"), $"prio_score")
-
-    // ---- 6. link extraction first (F9) — HandleGetResponse stores links
-    // for every doc GET in all lanes (content_crawler only skips the
-    // *enqueue*). Runs before the url-table reads because the wave's url
-    // key-set (fetched urls + extracted dsts) determines which buckets of
-    // the urls table this wave must read at all.
-    val linksRaw = getOk.filter($"is_doc")
+    // the extracted links, re-exploded from the fetch checkpoint by each reader
+    val linksRaw = fetched.filter(isGetOk && $"is_doc")
       .select($"url".as("src"), $"seq".as("src_seq"), $"vt".as("src_vt"),
-        $"lane".as("src_lane"),
-        posexplode(Funcs.extractLinksUdf($"url", $"html")).as(Seq("href_idx", "dst")))
-      .localCheckpoint()
+        $"lane".as("src_lane"), posexplode($"hrefs").as(Seq("href_idx", "dst")))
 
-    mark("getok_links_ck")
-    val linkRows = linksRaw
-      .withColumn("rn_", row_number().over(
-        Window.partitionBy($"src", $"dst").orderBy($"href_idx")))
-      .filter($"rn_" === 1)
-      .select(vtTs($"src_vt").as("created"), vtTs($"src_vt").as("updated"), $"src", $"dst")
-      .join(linksView.select($"src", $"dst"), Seq("src", "dst"), "left_anti")
+    // ---- 6b. the wave's urls slice: bucket-pruned to the keys this wave
+    // touches (taken urls + extracted dsts, whose buckets the fetch job
+    // collected) — O(delta) read; seed waves already hold the full view
+    val (urlsWave, urlsReadCount) =
+      if (doSeed) (urlsSeedFull, urlsFullRows)
+      else phase("urls_wave") {
+        val (u, m) = materialize("urls_wave", urlsViewBuckets(Some(touchedBuckets)),
+          count(lit(1)).as("n"))
+        (u, long(m, "n"))
+      }
+
+    // ---- 7. url writes (MOR appends): one frame, materialized once — the
+    // write, the bloom merge and the next-wave enqueue lookups all read it
+    val urlsEff = urlsWave.unionByName(seedCreates)
+
+    // GET and text/html HEAD responses update their url row (u.Read must
+    // succeed: inner join); a GET sets last_get and the parsed fields, a
+    // HEAD sets last_head
+    val isGet = col("g.method") === "GET"
+    val updates = fetched.filter(isGetOk || isHeadHtml).alias("g")
+      .join(urlsEff.alias("u"), col("g.url") === col("u.url"), "inner")
+      .select(
+        col("g.url").as("url"), col("u.created").as("created"), vtTs(col("g.vt")).as("updated"),
+        when(isGet, col("u.last_head")).otherwise(vtTs(col("g.vt"))).as("last_head"),
+        when(isGet, vtTs(col("g.vt"))).otherwise(col("u.last_get")).as("last_get"),
+        lit(200).as("status"), col("g.content_type").as("content_type"),
+        when(isGet, col("g.sniff")).otherwise(col("u.content_sniff")).as("content_sniff"),
+        col("g.body_len").as("content_length"),
+        when(isGet, coalesce(col("g.file_name_new"), col("u.file_name"), lit("")))
+          .otherwise(col("u.file_name")).as("file_name"),
+        when(isGet, coalesce(when(col("g.is_doc"), col("g.title")), col("u.title"), lit("")))
+          .otherwise(col("u.title")).as("title"),
+        col("u.id").as("id"), lit(0).as("headers_took"), lit(0).as("download_took"),
+        col("g.resp_headers").as("headers"), col("u.meta").as("meta"),
+        col("u.hash").as("hash"))
 
     // dst Read-or-Save (url.go:478-486)
     val dstFirst = linksRaw
       .withColumn("rn_", row_number().over(
         Window.partitionBy($"dst").orderBy($"src_seq", $"href_idx")))
       .filter($"rn_" === 1)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-
-    // ---- 6b. the wave's urls slice: bucket-pruned to the keys this wave
-    // touches (fetched urls + extracted dsts) — O(delta) read; the full MOR
-    // view is only materialized on seed waves
-    val urlsWave: DataFrame =
-      if (doSeed) urlsSeedFull
-      else {
-        val keyUrls = budgeted.select($"url")
-          .unionByName(dstFirst.select($"dst".as("url")))
-        val buckets = keyUrls.select(bucketCol($"url").as("b")).distinct()
-          .collect().map(_.getInt(0)).toSeq
-        urlsViewBuckets(Some(buckets)).localCheckpoint()
-      }
-    val urlsReadCount = urlsWave.count()
-    mark("urls_wave")
-
-    // ---- 7. url writes (MOR appends)
-    val urlsEff = urlsWave.unionByName(seedCreates)
-
-    val getUpdatesRaw = getOk.alias("g")
-      .join(urlsEff.alias("u"), col("g.url") === col("u.url"), "inner") // u.Read must succeed
-      .select(
-        col("g.url").as("url"), col("u.created").as("created"), vtTs($"vt").as("updated"),
-        col("u.last_head").as("last_head"), vtTs($"vt").as("last_get"),
-        lit(200).as("status"), col("g.content_type").as("content_type"),
-        col("g.sniff").as("content_sniff"), col("g.body_len").as("content_length"),
-        coalesce(col("g.file_name_new"), col("u.file_name"), lit("")).as("file_name"),
-        coalesce(when(col("g.is_doc"), col("g.title")), col("u.title"), lit("")).as("title"),
-        col("u.id").as("id"), lit(0).as("headers_took"), lit(0).as("download_took"),
-        col("g.resp_headers").as("headers"), col("u.meta").as("meta"),
-        col("u.hash").as("hash"))
-
-    val headUpdatesRaw = headHtml.alias("g")
-      .join(urlsEff.alias("u"), col("g.url") === col("u.url"), "inner")
-      .select(
-        col("g.url").as("url"), col("u.created").as("created"), vtTs($"vt").as("updated"),
-        vtTs($"vt").as("last_head"), col("u.last_get").as("last_get"),
-        lit(200).as("status"), col("g.content_type").as("content_type"),
-        col("u.content_sniff").as("content_sniff"), col("g.body_len").as("content_length"),
-        col("u.file_name").as("file_name"), col("u.title").as("title"),
-        col("u.id").as("id"), lit(0).as("headers_took"), lit(0).as("download_took"),
-        col("g.resp_headers").as("headers"), col("u.meta").as("meta"),
-        col("u.hash").as("hash"))
-
     // URL-seen check (J8/A9): sharded bloom prefilter over the committed
     // urls table — candidates the bloom rejects are definitely new (no false
     // negatives per shard) and skip the exact probe; only "maybe seen" pays
@@ -803,24 +848,29 @@ final class Scheduler(spark: SparkSession, store: TableStore, cfg: CrawlConfig) 
       case _ =>
         Scheduler.hashProbeNewUrls(dstNotSeeded, urlsWave.select("url"))
     }
-    val dstCreatesRaw = dstNew
-      .select(newUrlRowCols($"dst", vtTs($"src_vt")): _*)
+    val dstCreates = dstNew.select(newUrlRowCols($"dst", vtTs($"src_vt")): _*)
 
-    // the three url-write deltas are mutually independent — materialize
-    // them with concurrent job submission (driver-latency-bound actions)
-    val Seq(getUpdates, headUpdates, dstCreates) = par(Seq(
-      () => getUpdatesRaw.localCheckpoint(),
-      () => headUpdatesRaw.localCheckpoint(),
-      () => dstCreatesRaw.localCheckpoint()))
+    // w_prio 1 = created (source roots, link dsts), 2 = fetched update
+    val (urlDelta, urlDeltaRows, createdCount) = phase("url_delta") {
+      val (d, m) = materialize("url_delta", withMor(seedCreates, w, 1)
+        .unionByName(withMor(updates, w, 2))
+        .unionByName(withMor(dstCreates, w, 1)),
+        count(lit(1)).as("n"), count(when($"w_prio" === 1, 1)).as("created"))
+      (d, long(m, "n"), long(m, "created"))
+    }
 
-    mark("url_write_deltas")
     // ---- 8. snapshots (T9): GET-only append
-    val snapshotRows = getOk.select($"url", vtTs($"vt").as("created"),
+    val snapshotRows = fetched.filter(isGetOk).select($"url", vtTs($"vt").as("created"),
       lit(200).as("status"), lit(0L).as("duration"), $"resp_headers".as("headers"),
       lit("").as("hash"))
 
     // ---- 9. next-wave enqueues
-    val urlsAfter = urlsEffPlus(urlsEff, getUpdates, headUpdates, dstCreates)
+    // urls state visible to same-wave reads: base ∪ this wave's delta,
+    // latest (delta over base, update over create) per url
+    val urlsAfter = urlsEff.withColumn("p_", lit(0))
+      .unionByName(urlDelta.drop("w_wave", "ubucket").withColumnRenamed("w_prio", "p_"))
+      .withColumn("rn_", row_number().over(Window.partitionBy("url").orderBy(desc("p_"))))
+      .filter($"rn_" === 1).drop("rn_", "p_")
 
     // enqueueDstLinks (crawler.go:255-292): lanes A and C propagate; B doesn't
     val linkCands = linksRaw.filter($"src_lane".isin("A", "C"))
@@ -847,7 +897,7 @@ final class Scheduler(spark: SparkSession, store: TableStore, cfg: CrawlConfig) 
           lit(NeverFetchedScore)).as("prio_score"))
 
     // HEAD→GET follow-up (crawler.go:236-252)
-    val headFollow = headHtml
+    val headFollow = fetched.filter(isHeadHtml)
       .join(whitelist, Seq("host"), "left_semi")
       .join(urlsAfter.select($"url", $"last_get".as("u_last_get")), Seq("url"), "left")
       .withColumn("get_stale", $"u_last_get".isNull ||
@@ -859,16 +909,29 @@ final class Scheduler(spark: SparkSession, store: TableStore, cfg: CrawlConfig) 
         coalesce(lit(nowSec) - unix_timestamp($"u_last_get"),
           lit(NeverFetchedScore)).as("prio_score"))
 
-    // the `enqued` map check set (crawler.go:27-29): urls still occupying a
-    // frontier slot after this wave's takes — all active rows (queued and
-    // blocked, one frontier scan) plus this wave's seeds, minus the taken,
-    // plus the new blocked tombstones (taken ⊇ new-blocked, so re-adding
-    // them after the anti-join is exact). Never materialized as a table:
-    // the frontier is MOR — only the transition rows below get written.
-    val frontierActiveUrls = frontier0.select("url")
-      .unionByName(seedRowsCk.select("url"))
-      .join(budgeted.select($"url"), Seq("url"), "left_anti")
-      .unionByName(headBlockedRows.select("url"))
+    // unmatched HEADs hit the no-op DefaultHandler and keep their enqued slot
+    // forever (handler.go:62-64) — blocked tombstones
+    val headBlockedRows = fetched.filter(isHeadBlocked)
+      .select($"url", $"method", $"host", $"lane", $"wave", $"seq",
+        lit(StateBlocked).as("state"), $"prio_score")
+
+    // the `enqued` map check set (crawler.go:27-29): a url still occupies a
+    // frontier slot after this wave's takes if it held one before (an
+    // active committed row — queued or blocked, one frontier scan — or
+    // this wave's seed) and was not taken, or was taken and blocked (a
+    // blocked HEAD keeps its slot). One aggregation per url decides it;
+    // the fetch checkpoint holds every take. Never materialized as a
+    // table: the frontier is MOR — only the transition rows below get
+    // written.
+    def slots(df: DataFrame, held: Boolean, taken: Column, blocked: Column) =
+      df.select($"url", lit(held).as("held"), taken.as("taken"), blocked.as("blocked"))
+    val frontierActiveUrls = slots(frontier0, held = true, lit(false), lit(false))
+      .unionByName(slots(seedRows, held = true, lit(false), lit(false)))
+      .unionByName(slots(fetched, held = false, lit(true), isHeadBlocked))
+      .groupBy("url")
+      .agg(max($"held").as("held"), max($"taken").as("taken"), max($"blocked").as("blocked"))
+      .filter($"held" && (!$"taken" || $"blocked"))
+      .select("url")
 
     val newEnqueues = linkCands.unionByName(headFollow)
       .withColumn("rn_", row_number().over(
@@ -883,22 +946,21 @@ final class Scheduler(spark: SparkSession, store: TableStore, cfg: CrawlConfig) 
         row_number().over(Window.partitionBy($"host").orderBy($"ord1", $"ord2", $"url")).cast("long"))
       .select($"url", $"method", $"host", $"lane", lit(w + 1).as("wave"), $"seq",
         lit(StateQueued).as("state"), $"prio_score")
-      .persist(StorageLevel.MEMORY_AND_DISK)
 
     // this wave's frontier delta: O(seeds + takes + blocks + enqueues)
     // transition rows — queue depth never touches the write path (T1/T10
     // at 100x: the backlog can be billions of rows; the delta is bounded
     // by the politeness budget and the wave's link yield)
-    val takenRows = budgeted
+    val takenRows = fetched
       .select($"url", $"method", $"host", $"lane", $"wave", $"seq",
         lit(StateTaken).as("state"), $"prio_score")
-    val frontierAppends = withFrontierMor(seedRowsCk, w, PrioSeed)
+    val frontierAppends = withFrontierMor(seedRows, w, PrioSeed)
       .unionByName(withFrontierMor(takenRows, w, PrioTaken))
       .unionByName(withFrontierMor(headBlockedRows, w, PrioBlocked))
       .unionByName(withFrontierMor(newEnqueues, w, PrioEnqueued))
 
     // ---- 10. host state
-    val takenPerHost = budgeted.groupBy($"host", $"lane")
+    val takenPerHost = fetched.groupBy($"host", $"lane")
       .agg(max($"vt").as("max_vt"))
     // MOR delta: only the hosts whose state actually CHANGED this wave —
     // a robots fetch or at least one take. A backlog host that merely sat
@@ -921,145 +983,101 @@ final class Scheduler(spark: SparkSession, store: TableStore, cfg: CrawlConfig) 
       .withColumn("h_wave", lit(w))
 
     // ---- 11. fetch log (crawl-order artifact, O4)
-    val robotsLog = robotsFetched.select(lit(w).as("wave"), $"r_start".as("vt"),
-      $"host", $"lane", lit("GET").as("method"), $"robots_url".as("url"),
-      lit(-1L).as("seq"), when($"robots_found", 200).otherwise(0).as("status"),
-      lit("robots").as("outcome"))
-    val cmdLog = fetched.select(lit(w).as("wave"), $"vt", $"host", $"lane", $"method",
-      $"url", $"seq", when($"found", 200).otherwise(0).as("status"),
+    val robotsLog = hostPlan.filter($"robots_now").select(lit(w).as("wave"),
+      $"start_vt".as("vt"), $"host", $"lane", lit("GET").as("method"),
+      $"robots_url".as("url"), lit(-1L).as("seq"),
+      when($"robots_found", 200).otherwise(0).as("status"), lit("robots").as("outcome"))
+    val cmdLog = fetched.filter($"allowed").select(lit(w).as("wave"), $"vt", $"host",
+      $"lane", $"method", $"url", $"seq", when($"found", 200).otherwise(0).as("status"),
       when($"found", lit("ok")).otherwise(lit("error")).as("outcome"))
-    val disallowedLog = disallowed.select(lit(w).as("wave"), $"vt", $"host", $"lane",
-      $"method", $"url", $"seq", lit(0).as("status"), lit("disallowed").as("outcome"))
+    val disallowedLog = fetched.filter(!$"allowed").select(lit(w).as("wave"), $"vt",
+      $"host", $"lane", $"method", $"url", $"seq", lit(0).as("status"),
+      lit("disallowed").as("outcome"))
     val fetchLogRows = robotsLog.unionByName(cmdLog).unionByName(disallowedLog)
 
     // ---- 12. stage, lineage, atomic commit
-    // the bloom thunk records which shard dir the new manifest references,
-    // so post-commit pruning knows the one live dir without a Spark job
-    val bloomKeep = new java.util.concurrent.atomic.AtomicReference[String](null)
-    val urlAppends = withMor(seedCreates, w, 1)
-      .unionByName(withMor(getUpdates, w, 2))
-      .unionByName(withMor(headUpdates, w, 2))
-      .unionByName(withMor(dstCreates, w, 1))
-
-    // Every staged table write is independent of the others, and the wave's
-    // three stat counts read already-materialized frames — submit them all
-    // concurrently (the wave is driver-job-latency-bound; the writes also
-    // overlap their input materializations). "#"-keyed results are counts,
-    // everything else is (table -> staged version).
-    val actions = Seq[() => (String, Long)](
-      // cluster the delta by bucket so each output file covers few buckets —
-      // the bucket isin-filter then skips whole files via parquet stats
-      () => ("urls", store.stageAppend("urls", urlAppends.repartition(col("ubucket")))),
-      () => ("links", store.stageAppend("links", linkRows)),
-      () => ("snapshots", store.stageAppend("snapshots", snapshotRows)),
-      () => ("fetch_log", store.stageAppend("fetch_log", fetchLogRows)),
-      // frontier deltas cluster by fbucket like the urls table: point reads
-      // (seedUrl/markUncrawlable) prune to one bucket's files via parquet
-      // stats, and compaction can rewrite buckets independently
-      () => ("frontier", store.stageAppend("frontier",
-        frontierAppends.repartition(col("fbucket")))),
-      () => ("host_state", store.stageAppend("host_state", hostStateTouched)),
-      () => ("#taken", budgeted.count()),
-      () => ("#ok", fetched.filter($"found").count()),
-      () => ("#enq", newEnqueues.count())
-    ) ++ (if (doSeed)
-      Seq(() => ("whitelist", store.stageRewrite("whitelist", whitelist))) else Nil
-    ) ++ (if (cfg.useBloomPrefilter) Seq(() => {
-      // merge this wave's new urls into the sharded seen bloom: per-shard
-      // delta blooms built distributed, OR-merged into the previous
-      // version's shard files executor-side, published as a new version dir
-      // with the wave's manifest (dstCreates is already materialized, so
-      // the probe above saw the pre-merge filters — ordering is safe)
-      val newUrls = seedCreates.select("url").unionByName(dstCreates.select("url"))
-      // empty delta: re-point the manifest at the previous shard dir instead
-      // of rebuilding — most steady-state waves add few or no urls
-      val anyNew = !newUrls.isEmpty
-      val newDir =
-        if (anyNew || bloomDir.isEmpty) {
-          val d = s"${store.rootPath}/seen_bloom/v$w"
-          ShardedBloom.buildToDir(spark, newUrls, "url", cfg.bloomShards,
-            perShardItems, cfg.bloomFpp, d, bloomDir)
-          d
-        } else bloomDir.get
-      bloomKeep.set(newDir)
-      ("seen_bloom_meta", store.stageRewrite("seen_bloom_meta",
-        Seq((w, newDir, cfg.bloomShards, perShardItems, cfg.bloomFpp))
-          .toDF("wave", "dir", "shards", "per_shard_items", "fpp")))
-    }) else Nil)
-    mark("plan_build")
-    val results = par(actions)
-    mark("stage_writes")
-    val staged = results.filterNot(_._1.startsWith("#"))
-    val countOf = results.filter(_._1.startsWith("#")).toMap
-
-    // per-partition lineage of the committed files (T10 resumability
-    // evidence): full per-partition rows for the two load-bearing state
-    // tables (one Spark job each); every other staged delta is counted from
-    // its parquet FOOTERS on the driver — the same metadata an Iceberg
-    // manifest records at commit time, with zero extra cluster jobs
-    val bigTables = Set("urls", "frontier")
-    val perPart = staged.filter(kv => bigTables(kv._1)).map { case (t, v) =>
-      spark.read.parquet(store.versionPath(t, v))
-        .groupBy(spark_partition_id().as("partition_id"))
-        .agg(count(lit(1)).as("rows"))
-        .withColumn("wave", lit(w)).withColumn("table", lit(t))
-        .withColumn("version", lit(v))
-        .select("wave", "table", "partition_id", "rows", "version")
+    // Every table delta goes out in ONE write job, each sized to its row
+    // count (known from the jobs above, or bounded by them: enqueues <=
+    // links + HEAD follow-ups). urls and frontier deltas are sorted by
+    // bucket inside each file, so the bucket isin-filter of a point read
+    // still skips row groups via parquet stats. The seen-bloom merge runs
+    // beside it: per-shard delta blooms built distributed, OR-merged into
+    // the previous version's shard files executor-side, published as a new
+    // version dir with the wave's manifest (the url delta is materialized,
+    // so the probe above saw the pre-merge filters — ordering is safe); a
+    // wave that creates no url keeps the previous dir.
+    import TableStore.Delta
+    val deltas = Seq(
+      Delta("urls", urlDelta, filesFor(urlDeltaRows), Seq("ubucket")),
+      Delta("links", linkRows(linksRaw), filesFor(linkCount)),
+      Delta("snapshots", snapshotRows, filesFor(okCount)),
+      Delta("fetch_log", fetchLogRows, filesFor(takenCount + hostsInPlay)),
+      Delta("frontier", frontierAppends,
+        filesFor(seedCount + 2 * takenCount + linkCount), Seq("fbucket")),
+      Delta("host_state", hostStateTouched, filesFor(hostsInPlay))
+    ) ++ (if (doSeed) Seq(Delta("whitelist", whitelist, 1, rewrite = true)) else Nil)
+    val mergeBloom = cfg.useBloomPrefilter && (createdCount > 0 || bloomDir.isEmpty)
+    val (staged, liveBloom) = phase("stage_writes") {
+      val bloom = wave.async {
+        if (!mergeBloom) bloomDir else {
+          val d = store.stageDir(BloomDir)
+          ShardedBloom.buildToDir(spark, urlDelta.filter($"w_prio" === 1).select("url"),
+            "url", cfg.bloomShards, perShardItems, cfg.bloomFpp, d, bloomDir)
+          Some(d)
+        }
+      }
+      val s = scala.util.Try(store.stage(deltas, wave.par[RDD[InternalRow]]))
+      val b = scala.util.Try(bloom.get()) // wait for both before failing
+      (s.get, b.get)
     }
-    val footerDF = staged.filterNot(kv => bigTables(kv._1))
-      .map { case (t, v) =>
-        (w, t, -1, footerRowCount(store.versionPath(t, v)), v)
-      }.toDF("wave", "table", "partition_id", "rows", "version")
-    val lineageDF = (perPart :+ footerDF).reduce(_ unionByName _)
-    store.stageAppend("lineage", lineageDF)
-    mark("lineage")
 
-    val takenCount = countOf("#taken")
-    val okCount = countOf("#ok")
-    val enqCount = countOf("#enq")
+    // per-file lineage of the committed files (T10 resumability evidence):
+    // the row counts the write tasks returned — the same metadata an
+    // Iceberg manifest records at commit time, with no re-scan
+    phase("lineage") {
+      store.stage(Seq(Delta("lineage", staged.flatMap(st => st.fileRows.zipWithIndex.map {
+        case (rows, file) => (w, st.table, file, rows, st.version)
+      }).toDF("wave", "table", "partition_id", "rows", "version"), 1)))
+    }
+
+    // the frontier delta is seeds + takes + blocks + enqueues, so the
+    // enqueue count needs no job of its own
+    val enqCount = staged.find(_.table == "frontier").get.rows -
+      seedCount - takenCount - blockedCount
     // queue depth after this wave, from the deltas (never re-materializes
     // the frontier): queued-before-incl-seeds - taken + enqueued
     val depth = queuedTotal - takenCount + enqCount
 
     store.commitWave(w)
-    mark("commit")
 
     // prune superseded seen_bloom dirs now that the commit re-pointed the
     // manifest: each published dir is CUMULATIVE (the merge folds the
     // previous version's shards in), so only the referenced dir is live —
-    // without this a W-wave crawl keeps W full copies of the filter set
-    // (these dirs live outside TableStore snapshot expiry). A resume from
-    // an older snapshot falls back to rebuild-from-urls (dir check above).
-    Option(bloomKeep.get()).foreach { d =>
-      pruneBloomDirs(d); bloomDirCache = Some(d)
-    }
-
-    Seq(frontier0, urlsSeedFull, urlsWave, seedRowsCk, robotsFetched, hostPlan, budgeted,
-      fetched, getOk, headHtml, getUpdates, headUpdates, linksRaw, dstFirst,
-      dstCreates, newEnqueues, whitelist)
-      .filter(_ != null)
-      .foreach(df => try df.unpersist() catch { case _: Throwable => () })
-    // free this wave's localCheckpoint blocks (see rddsBefore above): every
-    // checkpointed frame is wave-scoped — nothing outside runWave reads one
-    // after it returns — so dropping the blocks is safe and keeps the
-    // BlockManager flat across arbitrarily many waves
-    val rddsAfter = spark.sparkContext.getPersistentRDDs
-    (rddsAfter.keySet -- rddsBefore).foreach { id =>
-      try rddsAfter(id).unpersist(blocking = false)
-      catch { case _: Throwable => () }
-    }
+    // without this a W-wave crawl keeps W full copies of the filter set.
+    // A resume from an older snapshot falls back to rebuild-from-urls.
+    liveBloom.foreach(pruneBloomDirs)
 
     WaveStats(w, takenCount, okCount, enqCount, depth, urlsReadCount)
   }
 
+  /** The links delta: first (src, dst) per page in href order, minus the
+    * pairs the links table already holds (Read-or-Insert, link.go:47-79). */
+  private def linkRows(linksRaw: DataFrame): DataFrame =
+    linksRaw
+      .withColumn("rn_", row_number().over(
+        Window.partitionBy($"src", $"dst").orderBy($"href_idx")))
+      .filter($"rn_" === 1)
+      .select(vtTs($"src_vt").as("created"), vtTs($"src_vt").as("updated"), $"src", $"dst")
+      .join(linksView.select($"src", $"dst"), Seq("src", "dst"), "left_anti")
+
   /** Delete every seen_bloom version dir except `keep` (the dir the
     * just-committed manifest references). Safe mid-crash: pruning runs
     * only AFTER commitWave, so an interrupted wave leaves the previous
-    * meta and its dir intact, and the orphaned new dir is swept on the
+    * manifest and its dir intact, and the orphaned new dir is swept on the
     * next successful wave. */
   private def pruneBloomDirs(keep: String): Unit = {
     import java.nio.file.{Files, Paths}
-    val base = Paths.get(s"${store.rootPath}/seen_bloom")
+    val base = Paths.get(s"${store.rootPath}/$BloomDir")
     if (!Files.isDirectory(base)) return
     val keepName = Paths.get(keep).getFileName
     import scala.jdk.CollectionConverters._
@@ -1078,12 +1096,8 @@ final class Scheduler(spark: SparkSession, store: TableStore, cfg: CrawlConfig) 
     val stats = scala.collection.mutable.ArrayBuffer.empty[WaveStats]
     var w = store.currentWave + 1
     var continue = true
-    val waveDebug = sys.env.contains("GRAFT_WAVE_DEBUG")
     while (continue && w < maxWaves) {
-      val t0 = System.nanoTime()
       val s = runWave(w)
-      if (waveDebug) System.err.println(
-        f"[wave] $w ${(System.nanoTime() - t0) / 1e9}%.2fs taken=${s.taken} enq=${s.enqueued}")
       stats += s
       if (cfg.compactEvery > 0 && w > 0 && w % cfg.compactEvery == 0) compactTables()
       if (s.frontierDepth == 0 && s.taken == 0 && s.enqueued == 0 && w > 0) continue = false
@@ -1175,7 +1189,7 @@ final class Scheduler(spark: SparkSession, store: TableStore, cfg: CrawlConfig) 
     * frontier compaction materializes the live view (queued + blocked; all
     * taken tombstones fold away) as one wave-stamped version, bounding the
     * transition-log read amplification on the same cadence as urls. */
-  def compactTables(): Unit = {
+  def compactTables(): Unit = tagged(s"compact ${store.currentWave}") {
     // Winner rows keep their ORIGINAL MOR stamps. Re-stamping everything at
     // the compaction wave (the old behavior) made the CDC readers
     // (`urlsChangedSince`/`frontierChangedSince`, which filter on
@@ -1184,13 +1198,13 @@ final class Scheduler(spark: SparkSession, store: TableStore, cfg: CrawlConfig) 
     // O(delta) incremental read into a full-table reprocess every 8 waves.
     // Preserving stamps is latest-wins-safe: later deltas are always
     // stamped at a strictly higher wave, so they still outrank.
-    store.compact("urls",
-      urlsWinnersStamped.repartition(col("ubucket")))
-    store.compact("links", linksView)
-    store.compact("snapshots", snapshotsView)
-    store.compact("frontier",
-      frontierWinnersStamped.repartition(col("fbucket")))
-    store.compact("host_state", hostWinnersStamped)
+    import TableStore.Delta
+    store.stage(Seq(
+      Delta("urls", urlsWinnersStamped.repartition(col("ubucket")), rewrite = true),
+      Delta("links", linksView, rewrite = true),
+      Delta("snapshots", snapshotsView, rewrite = true),
+      Delta("frontier", frontierWinnersStamped.repartition(col("fbucket")), rewrite = true),
+      Delta("host_state", hostWinnersStamped, rewrite = true)))
     store.commitWave(store.currentWave)
   }
 
@@ -1309,39 +1323,9 @@ final class Scheduler(spark: SparkSession, store: TableStore, cfg: CrawlConfig) 
     emptyDF[UrlRow]
   }
 
-  /** Sum of parquet-footer record counts under a version dir — commit-time
-    * metadata (what an Iceberg manifest stores), read driver-side without a
-    * Spark job. Only used for the small per-wave deltas. */
-  private def footerRowCount(dir: String): Long = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(conf)
-    if (!fs.exists(p)) 0L
-    else fs.listStatus(p)
-      .filter(_.getPath.getName.endsWith(".parquet"))
-      .map { st =>
-        val in = org.apache.parquet.hadoop.util.HadoopInputFile
-          .fromPath(st.getPath, conf)
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-        try r.getRecordCount finally r.close()
-      }.sum
-  }
-
   private def withMor(df: DataFrame, w: Long, prio: Int): DataFrame =
     df.withColumn("w_wave", lit(w)).withColumn("w_prio", lit(prio))
       .withColumn("ubucket", bucketCol(col("url")))
-
-  /** urls state visible to same-wave reads: base ∪ this wave's writes. */
-  private def urlsEffPlus(urlsEff: DataFrame, getUpd: DataFrame,
-      headUpd: DataFrame, creates: DataFrame): DataFrame = {
-    val all = urlsEff.withColumn("p_", lit(0))
-      .unionByName(getUpd.withColumn("p_", lit(2)))
-      .unionByName(headUpd.withColumn("p_", lit(2)))
-      .unionByName(creates.withColumn("p_", lit(1)))
-    val w = Window.partitionBy("url").orderBy(desc("p_"))
-    all.withColumn("rn_", row_number().over(w)).filter(col("rn_") === 1)
-      .drop("rn_", "p_")
-  }
 }
 
 /** Per-executor robots parse cache keyed by content (P8). Deliberately

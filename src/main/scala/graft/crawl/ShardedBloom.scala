@@ -46,6 +46,9 @@ final class SerializableHadoopConf(@transient var value: Configuration)
   *     files executor-side (same geometry), then publish a new version dir —
   *     the MOR pattern for filter state.
   *
+  * Each complete shard dir records its geometry in a `_geometry` file,
+  * written after the shards; readers validate it before probing.
+  *
   * Multi-node requirement: shard dirs must live on storage every executor
   * can reach (the TableStore root / defaultFS) — the Scheduler roots them
   * under `store.rootPath`, and all I/O goes through the session's Hadoop
@@ -122,6 +125,29 @@ object ShardedBloom {
           case Some(prev) => writeShard(dir, shard, prev, sconf.value)
           case None       => writeShard(dir, shard, emptyShard, sconf.value)
         }
+      }
+    }
+    // geometry last: a dir without it (an interrupted build) never validates
+    val out = fsys.create(new Path(geometryFile(dir)), true)
+    try out.write(s"$shards $perShardItems $fpp".getBytes("UTF-8")) finally out.close()
+  }
+
+  private def geometryFile(dir: String): String = s"$dir/_geometry"
+
+  /** The (shards, per-shard items, fpp) a complete shard dir was built with;
+    * None for a missing or unfinished dir. Probing with any other geometry
+    * hashes urls to the wrong shard or bit positions — silent false
+    * negatives — so callers rebuild on a mismatch. */
+  def geometry(spark: SparkSession, dir: String): Option[(Int, Long, Double)] = {
+    val (fsys, _) = fs(dir, spark.sparkContext.hadoopConfiguration)
+    val p = new Path(geometryFile(dir))
+    if (!fsys.exists(p)) None
+    else {
+      val in = fsys.open(p)
+      val txt = try new String(in.readAllBytes(), "UTF-8") finally in.close()
+      txt.trim.split(" ") match {
+        case Array(s, n, f) => Some((s.toInt, n.toLong, f.toDouble))
+        case _ => None
       }
     }
   }

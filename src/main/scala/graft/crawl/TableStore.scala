@@ -1,6 +1,13 @@
 package graft.crawl
 
+import org.apache.spark.TaskContext
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetWriteSupport}
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.StructType
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import java.nio.charset.StandardCharsets
 
@@ -176,8 +183,6 @@ final class TableStore(spark: SparkSession, rootDir: String) {
     }
   }
 
-  /** Stage an append (new delta version). Data is durable immediately but
-    * only becomes visible once commitWave() swaps the manifest. */
   /** Guards pendingVersions read-modify-write: a wave stages independent
     * tables from concurrent driver threads (standard Spark concurrent job
     * submission), so version reservation must be atomic. The reservation
@@ -185,6 +190,15 @@ final class TableStore(spark: SparkSession, rootDir: String) {
     * before commitWave publishes anything, so a reserved-but-dead version
     * is never visible. */
   private val stageLock = new Object
+
+  /** Reserve the next version of `table`: appended to its version list, or
+    * (`rewrite`) replacing it on commit. */
+  private def reserve(table: String, rewrite: Boolean): Long = stageLock.synchronized {
+    val n = pendingVersions.getOrElse(table, Seq(-1L)).lastOption.getOrElse(-1L) + 1
+    pendingVersions = pendingVersions.updated(table,
+      if (rewrite) Seq(n) else pendingVersions.getOrElse(table, Nil) :+ n)
+    n
+  }
 
   /** Seed the union-schema cache from the committed footers before the
     * first staged write to a table this session has never read: merging
@@ -203,37 +217,62 @@ final class TableStore(spark: SparkSession, rootDir: String) {
         catch { case _: org.apache.spark.sql.AnalysisException => () }
     }
 
-  def stageAppend(table: String, df: DataFrame,
-      partitionBy: Seq[String] = Nil): Long = {
-    primeSchema(table)
-    val next = stageLock.synchronized {
-      val n = pendingVersions.getOrElse(table, Seq(-1L)).lastOption.getOrElse(-1L) + 1
-      pendingVersions = pendingVersions.updated(table, pendingVersions.getOrElse(table, Nil) :+ n)
-      n
+  /** Stage a batch of table deltas and write them ALL in one Spark job.
+    * Each delta becomes a new version directory, durable immediately but
+    * visible only once commitWave() swaps the manifest — the manifest is
+    * the commit, so the tasks write their files straight into the
+    * unpublished version dir with no per-write commit protocol (no
+    * `_temporary` tree, no renames, no `_SUCCESS`). `par` prepares the
+    * deltas' plans (their shuffle stages run here) — the Scheduler passes
+    * its wave pool. Returns each delta's version and per-file row counts
+    * (the record counts an Iceberg manifest keeps), in input order. */
+  def stage(deltas: Seq[TableStore.Delta],
+      par: Seq[() => RDD[InternalRow]] => Seq[RDD[InternalRow]] = _.map(_())
+  ): Seq[TableStore.Staged] = {
+    deltas.foreach(d => if (!d.rewrite) primeSchema(d.table))
+    val versions = deltas.map(d => reserve(d.table, d.rewrite))
+    val dirs = deltas.zip(versions).map { case (d, v) => freshDir(tableDir(d.table, v)) }
+    val rdds = par(deltas.map(d => () => d.rdd(spark)))
+    val fileRows = TableStore.writeFiles(spark, rdds, deltas.map(_.df.schema), dirs)
+    deltas.foreach { d =>
+      if (d.rewrite) unionSchema.update(d.table, d.df.schema) // prior versions are dropped
+      // fold the delta's schema into the cached union BEFORE any read needs
+      // it: the first read of a store populated in-session then never pays a
+      // footer-merge job. (If this staged version is later dropped by
+      // resetPending the cache may keep a phantom column — reads then
+      // backfill it as nulls, which is the mergeSchema semantics anyway.)
+      else mergeInto(d.table, d.df.schema)
     }
-    val w = df.write.mode("overwrite")
-    (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w)
-      .parquet(tableDir(table, next).toString)
-    // fold the delta's schema into the cached union BEFORE any read needs
-    // it: the first read of a store populated in-session then never pays a
-    // footer-merge job. (If this staged version is later dropped by
-    // resetPending the cache may keep a phantom column — reads then
-    // backfill it as nulls, which is the mergeSchema semantics anyway.)
-    mergeInto(table, df.schema)
-    next
+    deltas.indices.map(i => TableStore.Staged(deltas(i).table, versions(i), fileRows(i)))
   }
 
+  /** Stage an append (new delta version). */
+  def stageAppend(table: String, df: DataFrame): Long =
+    stage(Seq(TableStore.Delta(table, df))).head.version
+
   /** Stage a full rewrite (replaces all prior versions on commit). */
-  def stageRewrite(table: String, df: DataFrame): Long = {
-    val next = stageLock.synchronized {
-      val n = pendingVersions.getOrElse(table, Seq(-1L)).lastOption.getOrElse(-1L) + 1
-      pendingVersions = pendingVersions.updated(table, Seq(n))
-      n
-    }
-    df.write.mode("overwrite").parquet(tableDir(table, next).toString)
-    unionSchema.update(table, df.schema) // prior versions are dropped
-    next
+  def stageRewrite(table: String, df: DataFrame): Long =
+    stage(Seq(TableStore.Delta(table, df, rewrite = true))).head.version
+
+  /** Reserve a fresh version directory for non-parquet state kept beside the
+    * tables (the seen-bloom shard files), with rewrite semantics: on commit
+    * the manifest references only this version. */
+  def stageDir(name: String): String = freshDir(tableDir(name, reserve(name, rewrite = true)))
+
+  /** An empty directory for a reserved version: a dir already there is an
+    * orphan of a wave that died before commit, and its files must not leak
+    * into the new version. */
+  private def freshDir(dir: Path): String = {
+    if (Files.exists(dir))
+      Files.walk(dir).sorted(java.util.Comparator.reverseOrder())
+        .forEach(p => Files.deleteIfExists(p))
+    Files.createDirectories(dir)
+    dir.toString
   }
+
+  /** The committed version directory of a `stageDir` state, if any. */
+  def committedDir(name: String): Option[String] =
+    committed.get(name).flatMap(_.lastOption).map(v => tableDir(name, v).toString)
 
   /** Atomically publish all staged versions as wave `wave`. Besides the
     * live `_manifest.json` pointer, the same content is written as an
@@ -363,22 +402,67 @@ final class TableStore(spark: SparkSession, rootDir: String) {
 
   /** Drop uncommitted staged state (resume path). */
   def resetPending(): Unit = { pendingVersions = committed }
+}
 
-  /** Compact an append-only/MOR table: materialize `view` as a single new
-    * version and drop history (Iceberg rewrite_data_files equivalent). */
-  def compact(table: String, view: DataFrame,
-      partitionBy: Seq[String] = Nil): Unit = {
-    // same atomic reservation as stageAppend/stageRewrite: compaction runs
-    // at wave end, but a concurrent staged write to another table must
-    // never race this table's read-modify-write of the shared map
-    val next = stageLock.synchronized {
-      val n = pendingVersions.getOrElse(table, Seq(-1L)).lastOption.getOrElse(-1L) + 1
-      pendingVersions = pendingVersions.updated(table, Seq(n))
-      n
+object TableStore {
+
+  /** One table delta of a staged batch. `files` caps its output file count
+    * (0 keeps the frame's own partitioning, one file per partition); rows
+    * are sorted by `sortBy` inside each file, so a small delta written as
+    * one file still keeps its bucket column clustered for parquet min/max
+    * skipping. `rewrite` replaces the table's versions on commit. */
+  final case class Delta(table: String, df: DataFrame, files: Int = 0,
+      sortBy: Seq[String] = Nil, rewrite: Boolean = false) {
+    private[TableStore] def rdd(spark: SparkSession): RDD[InternalRow] = {
+      val shaped0 = if (files > 0) df.coalesce(files) else df
+      val shaped =
+        if (sortBy.isEmpty) shaped0 else shaped0.sortWithinPartitions(sortBy.map(col): _*)
+      val qe = shaped.queryExecution
+      val r = SQLExecution.withNewExecutionId(qe, Some(s"stage $table"))(qe.toRdd)
+      // an empty frame can plan to zero partitions: still write one
+      // (empty) file so the version dir carries the delta's schema
+      if (r.getNumPartitions > 0) r
+      else spark.sparkContext.parallelize(Seq.empty[InternalRow], 1)
     }
-    val w = view.write.mode("overwrite")
-    (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w)
-      .parquet(tableDir(table, next).toString)
-    unionSchema.update(table, view.schema) // history is dropped
+  }
+
+  /** A staged delta: its version and the row count of each file written. */
+  final case class Staged(table: String, version: Long, fileRows: Seq[Long]) {
+    def rows: Long = fileRows.sum
+  }
+
+  /** Write every partition of every delta as one parquet file under its
+    * delta's directory, in ONE job over the union of the deltas' RDDs,
+    * through Spark's own parquet writer (ParquetFileFormat's
+    * OutputWriterFactory: same encoding, footer metadata and codec as a
+    * DataFrame write). A retried task rewrites the same file name. Returns
+    * per-delta, per-file row counts. */
+  private def writeFiles(spark: SparkSession, rdds: Seq[RDD[InternalRow]],
+      schemas: Seq[StructType], dirs: Seq[String]): Seq[Seq[Long]] = {
+    val job = org.apache.hadoop.mapreduce.Job.getInstance(spark.sparkContext.hadoopConfiguration)
+    val factories = schemas.map(s =>
+      new ParquetFileFormat().prepareWrite(spark, job, Map.empty, s)).toArray
+    val conf = new SerializableHadoopConf(job.getConfiguration)
+    val offsets = rdds.map(_.getNumPartitions).scanLeft(0)(_ + _).toArray
+    val schemaArr = schemas.toArray
+    val dirArr = dirs.toArray
+    val rows = spark.sparkContext.runJob(spark.sparkContext.union(rdds),
+      (ctx: TaskContext, it: Iterator[InternalRow]) => {
+        val p = ctx.partitionId()
+        val d = offsets.lastIndexWhere(_ <= p)
+        val taskConf = new org.apache.hadoop.conf.Configuration(conf.value)
+        ParquetWriteSupport.setSchema(schemaArr(d), taskConf)
+        val attempt = new org.apache.hadoop.mapreduce.TaskAttemptID(
+          new org.apache.hadoop.mapreduce.TaskID("stage", 0,
+            org.apache.hadoop.mapreduce.TaskType.MAP, p), ctx.attemptNumber())
+        val tac = new org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl(taskConf, attempt)
+        val f = factories(d)
+        val file = f"${dirArr(d)}/part-${p - offsets(d)}%05d${f.getFileExtension(tac)}"
+        val w = f.newInstance(file, schemaArr(d), tac)
+        var n = 0L
+        try it.foreach { r => w.write(r); n += 1 } finally w.close()
+        n
+      })
+    rdds.indices.map(i => rows.slice(offsets(i), offsets(i + 1)).toSeq)
   }
 }

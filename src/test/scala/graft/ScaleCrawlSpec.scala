@@ -351,4 +351,12 @@ class ScaleCrawlSpec extends AnyFunSuite {
       j.leftKeys.exists(_.dataType.typeName == "string")),
       "string-confirm leg missing")
   }
+
+  test("J8 probe rejects a candidate frame that already carries a uh_ column") {
+    // the probe's own hash column would silently overwrite the caller's
+    val cand = Seq(("http://h0/a", 7L)).toDF("dst", "uh_")
+    val seen = Seq("http://h0/a").toDF("url")
+    val e = intercept[IllegalArgumentException](Scheduler.hashProbeNewUrls(cand, seen))
+    assert(e.getMessage.contains("uh_"))
+  }
 }
