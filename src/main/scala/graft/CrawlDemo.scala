@@ -16,34 +16,14 @@ object CrawlDemo {
       .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
       .appName("graft-crawl-demo")
       .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("GRAFT_AQE", "true")) // AQE: right at scale; at toy
-      // scale its per-stage re-planning multiplies tiny-job overhead —
-      // GRAFT_AQE=false shows the fixed-cost floor
+      .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      // a wave generates ~150 distinct classes; Spark's default of 100
+      // cached ones recompiles most of them every wave
+      .config("spark.sql.codegen.cache.maxEntries", "4000")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    // per-job profile (GRAFT_JOB_DEBUG=1): duration + submission call site
-    if (sys.env.contains("GRAFT_JOB_DEBUG")) {
-      val starts = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()
-      spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          starts.put(j.jobId, (System.nanoTime(),
-            Option(j.properties.getProperty("callSite.short")).getOrElse("?")))
-        override def onJobEnd(j: org.apache.spark.scheduler.SparkListenerJobEnd): Unit = {
-          // the async listener bus drops events under load — a JobEnd whose
-          // JobStart was dropped must not throw (repeated listener failures
-          // silently disable the diagnostics this flag exists for)
-          starts.remove(j.jobId) match {
-            case null =>
-              System.err.println(f"[job] ${j.jobId}%4d      ?s (start event dropped)")
-            case (t0, site) =>
-              System.err.println(f"[job] ${j.jobId}%4d ${(System.nanoTime() - t0) / 1e9}%6.2fs $site")
-          }
-        }
-      })
-    }
     graft.functions.Funcs.register(spark)
 
     val store = new TableStore(spark, dir)

@@ -68,44 +68,57 @@ final case class CrawlConfig(
   *
   * Driver cost: a wave is bound by Spark job latency, not compute, so it
   * materializes each intermediate once, takes its counts from the jobs
-  * that materialize them, and writes all table deltas in one job — 42 jobs
-  * and 2 parquet writes per wave on the 112-host scale crawl. Every
+  * that materialize them, and writes all table deltas in one job — 39–41
+  * jobs and 2 parquet writes per wave on the 112-host scale crawl. Every
   * job is tagged `wave <w> <phase>`; `runWave` lists the phases.
   */
 /** Static query shapes shared by the wave loop and its plan-shape specs. */
 object Scheduler {
 
-  /** J8 URL-seen probe, hash-exchange form (the round-5 bench kernel's plan,
-    * promoted to the production enqueue path WITH the exact string-confirm
-    * leg the kernel documents):
+  /** J8 URL-seen probe: the `cand` rows whose `dst` is not in `seen.url` —
+    * multiset-identical to `cand.join(seen.withColumnRenamed("url", "dst"),
+    * Seq("dst"), "left_anti")`, with duplicates, null dsts and every carried
+    * column kept, in `cand`'s column order. Two joins, each input read once:
     *
-    *   1. anti-join candidate dsts against xxhash64(url) of the seen slice —
-    *      the table side of the exchange carries 8-BYTE LONGS, not ~60-byte
-    *      url strings (guide §2.3: shuffle keys, not payloads). A hash
-    *      absent from the table is DEFINITELY novel (no false negatives).
-    *   2. candidates whose hash IS present are confirmed against strings —
-    *      but only against the O(matched) seen rows sharing a candidate
-    *      hash (semi-join by hash first), so the string exchange is
-    *      O(maybe-seen), never O(table slice). A 64-bit collision therefore
-    *      costs a few confirm rows, never a lost url.
-    *
-    * Returns exactly the `cand` rows whose `dst` does not appear in
-    * `seen`'s `url` column — set-identical to
-    * `cand.join(seen.withColumnRenamed("url","dst"), Seq("dst"),
-    * "left_anti")`, with all other `cand` columns carried through. */
-  private[graft] def hashProbeNewUrls(cand: DataFrame, seen: DataFrame): DataFrame = {
+    *   1. the candidates, hashed (xxhash64 of dst), are shared through ONE
+    *      lazy local checkpoint — evaluated once per call, whatever their
+    *      subtree costs; no cache entry, so no later probe reuses them.
+    *      The checkpoint runs the candidates' shuffle stages when the probe
+    *      is called; `own` receives its RDD for the caller to free (without
+    *      an owner, Spark's ContextCleaner frees it once it is unreachable).
+    *   2. the seen table, as `(xxhash64(url), url)`, is left-semi-joined
+    *      against the candidates' hash set (one long column): the O(matched)
+    *      seen rows sharing a candidate hash. A seen url equal to a
+    *      candidate has the same hash, so it is in this slice; while the
+    *      hash set broadcasts, the seen table's strings never cross an
+    *      exchange.
+    *   3. the candidates are string-anti-joined against that slice; a
+    *      64-bit collision costs a slice row, never a lost url. */
+  private[graft] def hashProbeNewUrls(cand: DataFrame, seen: DataFrame,
+      own: RDD[_] => Unit = _ => ()): DataFrame = {
     require(!cand.columns.contains("uh_"),
       "hashProbeNewUrls: the candidate frame already has a uh_ column, which the probe would overwrite")
-    val c = cand.withColumn("uh_", xxhash64(col("dst")))
-    val sh = seen.select(xxhash64(col("url")).as("uh_"), col("url"))
-    val hashNovel = c.join(sh.select("uh_"), Seq("uh_"), "left_anti")
-    val maybe = c.join(sh.select("uh_"), Seq("uh_"), "left_semi")
-    val hitSeen = sh.join(c.select("uh_"), Seq("uh_"), "left_semi")
-    val collidedNovel = maybe
-      .join(hitSeen.select(col("url").as("dst")), Seq("dst"), "left_anti")
-    hashNovel.unionByName(collidedNovel)
+    val c = shareLazily(cand.withColumn("uh_", xxhash64(col("dst"))), own)
+    val hitSeen = seen.select(xxhash64(col("url")).as("uh_"), col("url"))
+      .join(c.select("uh_"), Seq("uh_"), "left_semi")
+    c.join(hitSeen.select(col("url").as("dst")), Seq("dst"), "left_anti")
       .select(cand.columns.map(col): _*)
   }
+
+  /** A lazy local checkpoint of `df`, whose RDD goes to `own`: its shuffle
+    * stages run now, its first reader computes its rows and the other
+    * readers share them. */
+  private def shareLazily(df: DataFrame, own: RDD[_] => Unit): DataFrame = {
+    val ck = df.localCheckpoint(eager = false)
+    checkpointRdds(ck).foreach(own)
+    ck
+  }
+
+  /** The RDDs a local checkpoint of `df` holds its rows in. */
+  private def checkpointRdds(df: DataFrame): Seq[RDD[_]] =
+    df.queryExecution.logical.collect {
+      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
+    }
 }
 
 final class Scheduler(spark: SparkSession, store: TableStore, cfg: CrawlConfig) {
@@ -517,12 +530,12 @@ final class Scheduler(spark: SparkSession, store: TableStore, cfg: CrawlConfig) 
       val obs = new org.apache.spark.sql.Observation(s"wave${w}_$name")
       val ck = (if (metrics.isEmpty) df
         else df.observe(obs, metrics.head, metrics.tail: _*)).localCheckpoint()
-      ck.queryExecution.logical.foreach {
-        case l: org.apache.spark.sql.execution.LogicalRDD => owned.add(l.rdd)
-        case _ => ()
-      }
+      Scheduler.checkpointRdds(ck).foreach(own)
       (ck, if (metrics.isEmpty) Map.empty else obs.get)
     }
+
+    /** Free `rdd` when the wave ends. */
+    def own(rdd: RDD[_]): Unit = owned.add(rdd)
 
     def release(): Unit = owned.forEach(r => try r.unpersist(blocking = false)
       catch { case _: Throwable => () })
@@ -546,14 +559,17 @@ final class Scheduler(spark: SparkSession, store: TableStore, cfg: CrawlConfig) 
     *     in one materialization; its job counts takes, oks, blocks and
     *     links, and collects the url buckets the takes and links touch.
     *   - urls_wave (steady-state waves): the bucket-pruned urls slice.
-    *   - url_delta: the wave's urls delta (creates + updates).
+    *   - url_delta: the wave's urls delta (creates + updates), with the
+    *     J8 probe of the link dsts against the urls slice.
     *   - stage_writes: every table delta in ONE write job, concurrently
     *     with the seen-bloom merge.
     *   - lineage: one small write of per-file row counts.
     *
-    * Materializations: 5 on a steady-state wave, 8 on a seed wave; parquet
-    * writes: 2. On the 112-host scale crawl a wave runs 42 jobs; a refill
-    * seed wave (queue under lowWatermark, with history) runs about 50. */
+    * Materializations: 5 on a steady-state wave, 8 on a seed wave, plus
+    * url_delta's two lazy checkpoints (the bloom-tagged dsts and the probe's
+    * candidates); parquet writes: 2. On the 112-host scale crawl a wave
+    * runs 39–41 jobs; a refill seed wave (queue under lowWatermark, with
+    * history) runs about 50. */
   def runWave(w: Long): WaveStats = {
     store.resetPending()
     val wave = new Wave(w)
@@ -831,27 +847,30 @@ final class Scheduler(spark: SparkSession, store: TableStore, cfg: CrawlConfig) 
     // is always checked.
     val dstNotSeeded = dstFirst
       .join(seedCreates.select($"url".as("dst")), Seq("dst"), "left_anti")
-    // "maybe seen" candidates probe the urls slice via the HASH-EXCHANGE
-    // anti-join + string-confirm (Scheduler.hashProbeNewUrls): the table
-    // side of the exchange carries xxhash64 longs, the string confirm pays
-    // only O(maybe-seen) rows — the round-5 bench kernel's plan, now the
-    // production J8 (plan-asserted in ScaleCrawlSpec)
-    val dstNew = bloomDir match {
-      case Some(dir) =>
-        val hit = ShardedBloom.mightContainCol(spark, dir, cfg.bloomShards,
-          $"dst", requireShards = true)
-        val tagged = dstNotSeeded.withColumn("bloom_hit", hit)
-        val definitelyNew = tagged.filter(!$"bloom_hit")
-        val maybeSeen = Scheduler.hashProbeNewUrls(
-          tagged.filter($"bloom_hit"), urlsWave.select("url"))
-        definitelyNew.unionByName(maybeSeen).drop("bloom_hit")
-      case _ =>
-        Scheduler.hashProbeNewUrls(dstNotSeeded, urlsWave.select("url"))
-    }
-    val dstCreates = dstNew.select(newUrlRowCols($"dst", vtTs($"src_vt")): _*)
-
+    // "maybe seen" candidates probe the urls slice exactly
+    // (Scheduler.hashProbeNewUrls, plan-asserted in ScaleCrawlSpec): the
+    // candidates are checkpointed once, the slice is semi-joined down to
+    // the rows sharing a candidate's xxhash64, and the candidates are
+    // string-anti-joined against those. The probe's checkpoint runs the
+    // candidates' shuffle stages when it is called, so it is built inside
+    // the phase (its jobs carry the tag) and the wave owns its RDD.
     // w_prio 1 = created (source roots, link dsts), 2 = fetched update
     val (urlDelta, urlDeltaRows, createdCount) = phase("url_delta") {
+      val dstNew = bloomDir match {
+        case Some(dir) =>
+          val hit = ShardedBloom.mightContainCol(spark, dir, cfg.bloomShards,
+            $"dst", requireShards = true)
+          // both legs read the tagged candidates: one lazy checkpoint runs
+          // their window exchange and the bloom probe once, not per leg
+          val tagged = Scheduler.shareLazily(dstNotSeeded.withColumn("bloom_hit", hit), wave.own)
+          val definitelyNew = tagged.filter(!$"bloom_hit")
+          val maybeSeen = Scheduler.hashProbeNewUrls(
+            tagged.filter($"bloom_hit"), urlsWave.select("url"), wave.own)
+          definitelyNew.unionByName(maybeSeen).drop("bloom_hit")
+        case _ =>
+          Scheduler.hashProbeNewUrls(dstNotSeeded, urlsWave.select("url"), wave.own)
+      }
+      val dstCreates = dstNew.select(newUrlRowCols($"dst", vtTs($"src_vt")): _*)
       val (d, m) = materialize("url_delta", withMor(seedCreates, w, 1)
         .unionByName(withMor(updates, w, 2))
         .unionByName(withMor(dstCreates, w, 1)),

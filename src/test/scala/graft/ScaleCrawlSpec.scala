@@ -308,16 +308,20 @@ class ScaleCrawlSpec extends AnyFunSuite {
     assert(totalFetched >= okGets.size)
   }
 
-  test("J8 enqueue probe: hash anti-join exchanges longs; string confirm is exact") {
-    import org.apache.spark.sql.execution.SparkPlan
+  test("J8 enqueue probe: hash semi-join reaches seen; candidates read once") {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
     import org.apache.spark.sql.execution.joins.BaseJoinExec
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    import org.apache.spark.sql.types.LongType
-    // candidate dsts with extra carried columns + a seen slice that plants
+    import org.apache.spark.sql.types.{LongType, StringType}
+    // candidate dsts with extra carried columns + a seen table that plants
     // a true member, a non-member, and duplicate cand rows
     val cand = Seq(("http://h0/a", 1L), ("http://h0/b", 2L),
       ("http://h0/b", 3L), ("http://h1/c", 4L)).toDF("dst", "tag")
-    val seen = Seq("http://h0/a", "http://h9/z", "http://h0/q").toDF("url")
+    val seenDir = SparkTestBase.tempDir("j8-seen")
+    Seq("http://h0/a", "http://h9/z", "http://h0/q").toDF("url")
+      .write.mode("overwrite").parquet(seenDir)
+    val seen = spark.read.parquet(seenDir)
     val probed = Scheduler.hashProbeNewUrls(cand, seen)
     // exact equivalence with the plain string anti-join, duplicates kept
     val expected = cand.join(seen.select(col("url").as("dst")),
@@ -325,31 +329,58 @@ class ScaleCrawlSpec extends AnyFunSuite {
     assert(probed.collect().map(_.toString).sorted.toSeq ==
       expected.collect().map(_.toString).sorted.toSeq)
     assert(probed.columns.toSeq == cand.columns.toSeq, "column order preserved")
-    // plan shape: the LeftAnti join keyed on the hash must build/stream a
-    // table side whose output is EXACTLY one long column (8 bytes/row on
-    // the exchange) — never the url strings
+
+    // plan shape, on the executed (adaptive) plan: AQE wraps materialized
+    // subtrees in QueryStageExec nodes with no children — walk into them
     probed.write.format("noop").mode("overwrite").save()
-    // AQE wraps materialized subtrees in QueryStageExec nodes with no
-    // children — unwrap both those and nested adaptive roots
-    def collectJoins(plan: SparkPlan): Seq[BaseJoinExec] = {
-      val here = plan.collect { case j: BaseJoinExec => j }
-      val stages = plan.collect { case q: QueryStageExec =>
-        collectJoins(q.plan) }.flatten
-      val adaptive = plan.collect { case a: AdaptiveSparkPlanExec =>
-        collectJoins(a.executedPlan) }.flatten
-      here ++ stages ++ adaptive
+    def kids(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+      case q: QueryStageExec => Seq(q.plan)
+      case r: ReusedExchangeExec => Seq(r.child)
+      case other => other.children
     }
-    val joins = collectJoins(probed.queryExecution.executedPlan)
-    val hashAnti = joins.filter(j => j.joinType.sql == "LEFT ANTI" &&
-      j.leftKeys.nonEmpty && j.leftKeys.forall(_.dataType == LongType))
-    assert(hashAnti.nonEmpty, s"no hash-keyed LeftAnti join in:\n$joins")
-    assert(hashAnti.exists(j => j.right.output.size == 1 &&
-      j.right.output.head.dataType == LongType),
-      "hash anti-join table side must carry exactly one long column")
-    // the string-confirm anti-join exists and is keyed on the url string
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: kids(p).flatMap(nodes)
+    def isSeenScan(p: SparkPlan): Boolean = p match {
+      case f: FileSourceScanExec =>
+        f.relation.location.rootPaths.exists(_.toString.contains(new java.io.File(seenDir).getName))
+      case _ => false
+    }
+    // each scan of the seen table, with the nearest join above it and
+    // whether the scan feeds that join's left side
+    def seenReach(p: SparkPlan, via: Option[(BaseJoinExec, Boolean)])
+        : Seq[Option[(BaseJoinExec, Boolean)]] = p match {
+      case s if isSeenScan(s) => Seq(via)
+      case j: BaseJoinExec =>
+        seenReach(j.left, Some((j, true))) ++ seenReach(j.right, Some((j, false)))
+      case other => kids(other).flatMap(seenReach(_, via))
+    }
+    val plan = probed.queryExecution.executedPlan
+    val reach = seenReach(plan, None)
+    assert(reach.size == 1, s"the seen table is scanned ${reach.size} times in:\n$plan")
+    val (semi, seenLeft) = reach.head.getOrElse(fail(s"the seen scan feeds no join in:\n$plan"))
+    assert(seenLeft && semi.joinType.sql == "LEFT SEMI" &&
+      semi.leftKeys.nonEmpty && semi.leftKeys.forall(_.dataType == LongType),
+      s"the seen table must feed a hash-keyed LeftSemi, got:\n$semi")
+    assert(semi.right.output.map(_.dataType) == Seq(LongType),
+      s"the semi-join's candidate side must be exactly one long column: ${semi.right.output}")
+    val joins = nodes(plan).collect { case j: BaseJoinExec => j }
     assert(joins.exists(j => j.joinType.sql == "LEFT ANTI" &&
-      j.leftKeys.exists(_.dataType.typeName == "string")),
-      "string-confirm leg missing")
+      j.leftKeys.nonEmpty && j.leftKeys.forall(_.dataType == StringType)),
+      s"no string-keyed LeftAnti in:\n$plan")
+
+    // the candidates are evaluated once per probe: a counting UDF in a
+    // carried column fires |cand| times per call, on each of two calls
+    val evals = spark.sparkContext.longAccumulator("j8-candidate-evals")
+    val tick = udf { (t: Long) => evals.add(1); t }
+    val counted = cand.withColumn("tag", tick(col("tag")))
+    (1 to 2).foreach { call =>
+      val before = evals.value
+      val out = Scheduler.hashProbeNewUrls(counted, seen).collect()
+      assert(out.length == expected.count())
+      assert(evals.value - before == cand.count(),
+        s"call $call evaluated ${evals.value - before} candidate rows, not ${cand.count()}")
+    }
+    assert(spark.sharedState.cacheManager.isEmpty, "the probe left a CacheManager entry")
   }
 
   test("J8 probe rejects a candidate frame that already carries a uh_ column") {

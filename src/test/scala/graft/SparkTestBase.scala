@@ -11,6 +11,9 @@ object SparkTestBase {
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      // a crawl wave generates ~150 distinct classes; Spark's default of
+      // 100 cached ones recompiles most of them every wave
+      .config("spark.sql.codegen.cache.maxEntries", "4000")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

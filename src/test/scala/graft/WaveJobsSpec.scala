@@ -64,6 +64,29 @@ class WaveJobsSpec extends AnyFunSuite {
     }
   }
 
+  test("a wave leaves none of its own persistent RDDs behind") {
+    val s = scheduler("wave-frees-rdds")
+    val sc = spark.sparkContext
+    (0L to 2L).foreach { w =>
+      val before = sc.getPersistentRDDs.keySet
+      // hold every RDD persisted while the wave runs: the context tracks
+      // them weakly, so one a GC collects would vanish from
+      // getPersistentRDDs without ever being freed
+      val held = scala.collection.concurrent.TrieMap.empty[Int, org.apache.spark.rdd.RDD[_]]
+      @volatile var running = true
+      val poller = new Thread(() => while (running) {
+        sc.getPersistentRDDs.foreach { case (id, r) => if (!before(id)) held.put(id, r) }
+        Thread.sleep(5)
+      })
+      poller.start()
+      try s.runWave(w) finally { running = false; poller.join() }
+      assert(held.nonEmpty, s"wave $w persisted nothing")
+      val left = held.values.filter(_.getStorageLevel.isValid)
+      assert(left.isEmpty, s"wave $w left persistent RDDs behind: ${left.mkString(", ")}")
+      assert((sc.getPersistentRDDs.keySet -- before).isEmpty)
+    }
+  }
+
   test("a frame another thread caches while a wave runs stays cached") {
     val s = scheduler("wave-owned-rdds")
     s.runWave(0L)
