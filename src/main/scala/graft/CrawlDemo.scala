@@ -27,11 +27,7 @@ object CrawlDemo {
     graft.functions.Funcs.register(spark)
 
     val store = new TableStore(spark, dir)
-    val cfg = CrawlConfig(
-      useBloomPrefilter = sys.env.getOrElse("GRAFT_BLOOM", "1") == "1",
-      bloomShards = sys.env.getOrElse("GRAFT_SHARDS", "8").toInt,
-      bloomExpectedItems = sys.env.getOrElse("GRAFT_BLOOM_ITEMS", s"${1L << 20}").toLong)
-    val sched = new Scheduler(spark, store, cfg)
+    val sched = new Scheduler(spark, store, CrawlConfig())
     if (!store.exists("pages")) {
       println(s"[demo] bootstrapping fixture site into $dir")
       sched.bootstrap(

@@ -24,10 +24,13 @@ final case class CrawlConfig(
       * of the north star. Off by default: the reference's fetchbot queues
       * are FIFO and the golden crawl-order oracles pin that ordering. */
     stalenessPriority: Boolean = false,
-    useBloomPrefilter: Boolean = true, // A9: bloom URL-seen prefilter ahead of the exact anti-join
+    /** Geometry of the A9 sharded-bloom operator: items, false-positive
+      * rate and shard count. The crawl wave reads none of these (its
+      * URL-seen check is the exact probe alone); perfbench's SeenKernel
+      * sizes its bloom from them. */
     bloomExpectedItems: Long = 1L << 20,
     bloomFpp: Double = 0.01,
-    bloomShards: Int = 8,   // per-shard Bloom files; never one driver-held filter
+    bloomShards: Int = 8,
     urlBuckets: Int = 16,   // urls table hash-bucket partitioning (O(delta) waves)
     compactEvery: Int = 8)
 
@@ -68,8 +71,8 @@ final case class CrawlConfig(
   *
   * Driver cost: a wave is bound by Spark job latency, not compute, so it
   * materializes each intermediate once, takes its counts from the jobs
-  * that materialize them, and writes all table deltas in one job — 39–41
-  * jobs and 2 parquet writes per wave on the 112-host scale crawl. Every
+  * that materialize them, and writes all table deltas in one job — about
+  * 39 jobs and 2 parquet writes per wave on the 112-host scale crawl. Every
   * job is tagged `wave <w> <phase>`; `runWave` lists the phases.
   */
 /** Static query shapes shared by the wave loop and its plan-shape specs. */
@@ -115,7 +118,7 @@ object Scheduler {
   }
 
   /** The RDDs a local checkpoint of `df` holds its rows in. */
-  private def checkpointRdds(df: DataFrame): Seq[RDD[_]] =
+  private[graft] def checkpointRdds(df: DataFrame): Seq[RDD[_]] =
     df.queryExecution.logical.collect {
       case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
     }
@@ -131,14 +134,13 @@ final class Scheduler(spark: SparkSession, store: TableStore, cfg: CrawlConfig) 
   private val baseEpochSec: Long = Model.VirtualEpoch.getTime / 1000L
 
   /** The wave pool: a wave's INDEPENDENT actions (the concurrent
-    * materializations, the delta plans' shuffle stages, the seen-bloom
-    * merge) submit from here. A wave is dominated by driver-side job
-    * latency, not compute — each action is one round trip through the
-    * scheduler — so independent actions overlap (the standard Spark
-    * multi-job driver pattern; shared materialized frames are safe, the
-    * BlockManager serializes first-computation per block). Failures
-    * propagate: any action throwing fails the wave before commitWave
-    * publishes. */
+    * materializations and the delta plans' shuffle stages) submit from
+    * here. A wave is dominated by driver-side job latency, not compute —
+    * each action is one round trip through the scheduler — so independent
+    * actions overlap (the standard Spark multi-job driver pattern; shared
+    * materialized frames are safe, the BlockManager serializes
+    * first-computation per block). Failures propagate: any action throwing
+    * fails the wave before commitWave publishes. */
   private val waveExec = java.util.concurrent.Executors.newFixedThreadPool(12,
     (r: Runnable) => { val t = new Thread(r, "wave-par"); t.setDaemon(true); t })
 
@@ -440,12 +442,6 @@ final class Scheduler(spark: SparkSession, store: TableStore, cfg: CrawlConfig) 
   final case class WaveStats(wave: Long, taken: Long, fetchedOk: Long,
       enqueued: Long, frontierDepth: Long, urlsRead: Long = 0L)
 
-  private def perShardItems: Long =
-    math.max(64L, cfg.bloomExpectedItems / cfg.bloomShards)
-
-  /** Store name of the seen-bloom shard dirs (a `stageDir` state). */
-  private val BloomDir = "seen_bloom"
-
   /** Rows per output file of a staged delta: a wave's deltas are usually a
     * few thousand rows, and one file per small delta keeps the write to
     * one task and two files (data + checksum) instead of one per shuffle
@@ -501,27 +497,21 @@ final class Scheduler(spark: SparkSession, store: TableStore, cfg: CrawlConfig) 
     private val sc = spark.sparkContext
     private val owned = new java.util.concurrent.ConcurrentLinkedQueue[RDD[_]]()
 
-    private def description: String = sc.getLocalProperty("spark.job.description")
-
     def phase[T](name: String)(body: => T): T = tagged(s"wave $w $name")(body)
 
-    /** Run `body` on the wave pool under the calling thread's tag: pool
-      * threads copy local properties only when they are created, so each
-      * task sets its own. */
-    def async[T](body: => T): java.util.concurrent.Future[T] = {
-      val desc = description
-      waveExec.submit(new java.util.concurrent.Callable[T] {
+    /** Independent thunks, concurrently on the wave pool under the calling
+      * thread's tag (pool threads copy local properties only when they are
+      * created, so each task sets its own); waits for all, then rethrows
+      * the first failure. */
+    def par[T](thunks: Seq[() => T]): Seq[T] = {
+      val desc = sc.getLocalProperty("spark.job.description")
+      thunks.map(t => waveExec.submit(new java.util.concurrent.Callable[T] {
         def call(): T = {
           sc.setJobDescription(desc)
-          try body finally sc.setJobDescription(null)
+          try t() finally sc.setJobDescription(null)
         }
-      })
+      })).map(f => scala.util.Try(f.get())).map(_.get)
     }
-
-    /** Independent thunks, concurrently; waits for all, then rethrows the
-      * first failure. */
-    def par[T](thunks: Seq[() => T]): Seq[T] =
-      thunks.map(t => async(t())).map(f => scala.util.Try(f.get())).map(_.get)
 
     /** Local-checkpoint `df` (its shuffle stages plus one job) and return
       * the aggregates `metrics` observed by that same job, by name. */
@@ -548,8 +538,6 @@ final class Scheduler(spark: SparkSession, store: TableStore, cfg: CrawlConfig) 
     *     materialized; the same job counts the queued rows.
     *   - views: table views; a table's first read after a new version
     *     infers its schema from a footer (one job).
-    *   - bloom: the seen-bloom dir comes from the manifest and its geometry
-    *     file — no job unless it must be rebuilt.
     *   - seeding (seed waves only): the full urls view, the whitelist, the
     *     seeds and the new source url rows.
     *   - host_plan: per-(host,lane) plan incl. robots fetches,
@@ -560,16 +548,15 @@ final class Scheduler(spark: SparkSession, store: TableStore, cfg: CrawlConfig) 
     *     links, and collects the url buckets the takes and links touch.
     *   - urls_wave (steady-state waves): the bucket-pruned urls slice.
     *   - url_delta: the wave's urls delta (creates + updates), with the
-    *     J8 probe of the link dsts against the urls slice.
-    *   - stage_writes: every table delta in ONE write job, concurrently
-    *     with the seen-bloom merge.
+    *     J8 probe of the link dsts against the urls slice — the wave's one
+    *     URL-seen check.
+    *   - stage_writes: every table delta in ONE write job.
     *   - lineage: one small write of per-file row counts.
     *
     * Materializations: 5 on a steady-state wave, 8 on a seed wave, plus
-    * url_delta's two lazy checkpoints (the bloom-tagged dsts and the probe's
-    * candidates); parquet writes: 2. On the 112-host scale crawl a wave
-    * runs 39–41 jobs; a refill seed wave (queue under lowWatermark, with
-    * history) runs about 50. */
+    * the probe's lazy checkpoint of its candidates; parquet writes: 2. On
+    * the 112-host scale crawl a wave runs about 39 jobs; a refill seed wave
+    * (queue under lowWatermark, with history) runs about 50. */
   def runWave(w: Long): WaveStats = {
     store.resetPending()
     val wave = new Wave(w)
@@ -599,27 +586,6 @@ final class Scheduler(spark: SparkSession, store: TableStore, cfg: CrawlConfig) 
     // rewrite) infers its schema from a footer, which is a job
     val (uncrawl0, hostState0, pages) = phase("views") {
       (uncrawlablesView.select("url"), hostStateDF, pagesDF)
-    }
-
-    // URL-seen sharded bloom (A9): the manifest names the live shard dir and
-    // the dir's geometry file is validated against cfg on EVERY wave:
-    // probing with mismatched parameters hashes urls to the wrong shard /
-    // wrong bit positions — silent false negatives that re-create seen
-    // urls. A mismatch (e.g. GRAFT_SHARDS changed between runs), a pruned
-    // dir (resume from an old snapshot) or a pre-bloom store rebuilds the
-    // shards from the urls table — the documented restart path (SURVEY
-    // §7.4.6). The driver never holds a filter object.
-    val bloomDir: Option[String] = phase("bloom") {
-      if (!cfg.useBloomPrefilter) None
-      else store.committedDir(BloomDir)
-        .filter(d => ShardedBloom.geometry(spark, d)
-          .contains((cfg.bloomShards, perShardItems, cfg.bloomFpp)))
-        .orElse(if (!store.exists("urls")) None else {
-          val dir = store.stageDir(BloomDir)
-          ShardedBloom.buildToDir(spark, urlsView.select("url"), "url",
-            cfg.bloomShards, perShardItems, cfg.bloomFpp, dir)
-          Some(dir)
-        })
     }
 
     // ---- 1. seeding (crawler.go:139-153)
@@ -811,7 +777,7 @@ final class Scheduler(spark: SparkSession, store: TableStore, cfg: CrawlConfig) 
       }
 
     // ---- 7. url writes (MOR appends): one frame, materialized once — the
-    // write, the bloom merge and the next-wave enqueue lookups all read it
+    // write and the next-wave enqueue lookups both read it
     val urlsEff = urlsWave.unionByName(seedCreates)
 
     // GET and text/html HEAD responses update their url row (u.Read must
@@ -840,42 +806,27 @@ final class Scheduler(spark: SparkSession, store: TableStore, cfg: CrawlConfig) 
       .withColumn("rn_", row_number().over(
         Window.partitionBy($"dst").orderBy($"src_seq", $"href_idx")))
       .filter($"rn_" === 1)
-    // URL-seen check (J8/A9): sharded bloom prefilter over the committed
-    // urls table — candidates the bloom rejects are definitely new (no false
-    // negatives per shard) and skip the exact probe; only "maybe seen" pays
-    // the anti-join. The same-wave seedCreates delta (not yet in the bloom)
-    // is always checked.
-    val dstNotSeeded = dstFirst
-      .join(seedCreates.select($"url".as("dst")), Seq("dst"), "left_anti")
-    // "maybe seen" candidates probe the urls slice exactly
-    // (Scheduler.hashProbeNewUrls, plan-asserted in ScaleCrawlSpec): the
-    // candidates are checkpointed once, the slice is semi-joined down to
-    // the rows sharing a candidate's xxhash64, and the candidates are
+    // URL-seen check (J8): a dst that is neither one of this wave's source
+    // roots nor in the urls slice is new. The slice (the full view on a seed
+    // wave) holds every bucket a dst hashes to — the fetch job collected
+    // them — so the exact probe (Scheduler.hashProbeNewUrls, plan-asserted
+    // in ScaleCrawlSpec) decides against a frame the wave already holds:
+    // the candidates are checkpointed once, the slice is semi-joined down
+    // to the rows sharing a candidate's xxhash64, and the candidates are
     // string-anti-joined against those. The probe's checkpoint runs the
     // candidates' shuffle stages when it is called, so it is built inside
     // the phase (its jobs carry the tag) and the wave owns its RDD.
+    val dstNotSeeded = dstFirst
+      .join(seedCreates.select($"url".as("dst")), Seq("dst"), "left_anti")
     // w_prio 1 = created (source roots, link dsts), 2 = fetched update
-    val (urlDelta, urlDeltaRows, createdCount) = phase("url_delta") {
-      val dstNew = bloomDir match {
-        case Some(dir) =>
-          val hit = ShardedBloom.mightContainCol(spark, dir, cfg.bloomShards,
-            $"dst", requireShards = true)
-          // both legs read the tagged candidates: one lazy checkpoint runs
-          // their window exchange and the bloom probe once, not per leg
-          val tagged = Scheduler.shareLazily(dstNotSeeded.withColumn("bloom_hit", hit), wave.own)
-          val definitelyNew = tagged.filter(!$"bloom_hit")
-          val maybeSeen = Scheduler.hashProbeNewUrls(
-            tagged.filter($"bloom_hit"), urlsWave.select("url"), wave.own)
-          definitelyNew.unionByName(maybeSeen).drop("bloom_hit")
-        case _ =>
-          Scheduler.hashProbeNewUrls(dstNotSeeded, urlsWave.select("url"), wave.own)
-      }
+    val (urlDelta, urlDeltaRows) = phase("url_delta") {
+      val dstNew = Scheduler.hashProbeNewUrls(dstNotSeeded, urlsWave.select("url"), wave.own)
       val dstCreates = dstNew.select(newUrlRowCols($"dst", vtTs($"src_vt")): _*)
       val (d, m) = materialize("url_delta", withMor(seedCreates, w, 1)
         .unionByName(withMor(updates, w, 2))
         .unionByName(withMor(dstCreates, w, 1)),
-        count(lit(1)).as("n"), count(when($"w_prio" === 1, 1)).as("created"))
-      (d, long(m, "n"), long(m, "created"))
+        count(lit(1)).as("n"))
+      (d, long(m, "n"))
     }
 
     // ---- 8. snapshots (T9): GET-only append
@@ -1019,12 +970,7 @@ final class Scheduler(spark: SparkSession, store: TableStore, cfg: CrawlConfig) 
     // count (known from the jobs above, or bounded by them: enqueues <=
     // links + HEAD follow-ups). urls and frontier deltas are sorted by
     // bucket inside each file, so the bucket isin-filter of a point read
-    // still skips row groups via parquet stats. The seen-bloom merge runs
-    // beside it: per-shard delta blooms built distributed, OR-merged into
-    // the previous version's shard files executor-side, published as a new
-    // version dir with the wave's manifest (the url delta is materialized,
-    // so the probe above saw the pre-merge filters — ordering is safe); a
-    // wave that creates no url keeps the previous dir.
+    // still skips row groups via parquet stats.
     import TableStore.Delta
     val deltas = Seq(
       Delta("urls", urlDelta, filesFor(urlDeltaRows), Seq("ubucket")),
@@ -1035,19 +981,8 @@ final class Scheduler(spark: SparkSession, store: TableStore, cfg: CrawlConfig) 
         filesFor(seedCount + 2 * takenCount + linkCount), Seq("fbucket")),
       Delta("host_state", hostStateTouched, filesFor(hostsInPlay))
     ) ++ (if (doSeed) Seq(Delta("whitelist", whitelist, 1, rewrite = true)) else Nil)
-    val mergeBloom = cfg.useBloomPrefilter && (createdCount > 0 || bloomDir.isEmpty)
-    val (staged, liveBloom) = phase("stage_writes") {
-      val bloom = wave.async {
-        if (!mergeBloom) bloomDir else {
-          val d = store.stageDir(BloomDir)
-          ShardedBloom.buildToDir(spark, urlDelta.filter($"w_prio" === 1).select("url"),
-            "url", cfg.bloomShards, perShardItems, cfg.bloomFpp, d, bloomDir)
-          Some(d)
-        }
-      }
-      val s = scala.util.Try(store.stage(deltas, wave.par[RDD[InternalRow]]))
-      val b = scala.util.Try(bloom.get()) // wait for both before failing
-      (s.get, b.get)
+    val staged = phase("stage_writes") {
+      store.stage(deltas, wave.par[RDD[InternalRow]])
     }
 
     // per-file lineage of the committed files (T10 resumability evidence):
@@ -1069,13 +1004,6 @@ final class Scheduler(spark: SparkSession, store: TableStore, cfg: CrawlConfig) 
 
     store.commitWave(w)
 
-    // prune superseded seen_bloom dirs now that the commit re-pointed the
-    // manifest: each published dir is CUMULATIVE (the merge folds the
-    // previous version's shards in), so only the referenced dir is live —
-    // without this a W-wave crawl keeps W full copies of the filter set.
-    // A resume from an older snapshot falls back to rebuild-from-urls.
-    liveBloom.foreach(pruneBloomDirs)
-
     WaveStats(w, takenCount, okCount, enqCount, depth, urlsReadCount)
   }
 
@@ -1088,25 +1016,6 @@ final class Scheduler(spark: SparkSession, store: TableStore, cfg: CrawlConfig) 
       .filter($"rn_" === 1)
       .select(vtTs($"src_vt").as("created"), vtTs($"src_vt").as("updated"), $"src", $"dst")
       .join(linksView.select($"src", $"dst"), Seq("src", "dst"), "left_anti")
-
-  /** Delete every seen_bloom version dir except `keep` (the dir the
-    * just-committed manifest references). Safe mid-crash: pruning runs
-    * only AFTER commitWave, so an interrupted wave leaves the previous
-    * manifest and its dir intact, and the orphaned new dir is swept on the
-    * next successful wave. */
-  private def pruneBloomDirs(keep: String): Unit = {
-    import java.nio.file.{Files, Paths}
-    val base = Paths.get(s"${store.rootPath}/$BloomDir")
-    if (!Files.isDirectory(base)) return
-    val keepName = Paths.get(keep).getFileName
-    import scala.jdk.CollectionConverters._
-    Files.list(base).iterator().asScala.toSeq
-      .filter(d => Files.isDirectory(d) && d.getFileName != keepName)
-      .foreach { d =>
-        Files.walk(d).sorted(java.util.Comparator.reverseOrder())
-          .forEach(p => Files.deleteIfExists(p))
-      }
-  }
 
   // -------------------------------------------------------------- run loops
 

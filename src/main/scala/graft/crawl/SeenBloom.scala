@@ -1,24 +1,9 @@
 package graft.crawl
 
-import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders, SparkSession}
-import org.apache.spark.sql.expressions.Aggregator
-import org.apache.spark.sql.functions._
-
-/** Distributed URL-seen set: per-partition Bloom filters merged through
-  * Catalyst's partial/final aggregation tree (SURVEY §2.4 A9).
-  *
-  * Replaces sentry's in-memory `enqued` map + PK-upsert probe
-  * (/root/reference/crawler.go:27-29, core/url.go:397-440) at frontier
-  * scale: the bloom is a *prefilter* — no false negatives by construction —
-  * so candidates it rejects are definitely-new and skip the exact probe;
-  * only the "maybe seen"残 set pays the exact anti-join against the urls
-  * table. At 10^10 urls a 1%-fpp filter is ~12 GB — shard by url-hash range
-  * (one Bloom row per shard, same Aggregator, groupBy shard) and broadcast
-  * only the shards a partition needs; the sandbox uses one shard.
-  *
-  * The build is a typed Aggregator (Dataset-native, no RDD): Spark's hash
-  * aggregate gives per-partition partial buffers merged in a tree — the
-  * treeAggregate shape, expressed in Catalyst.
+/** A plain Bloom filter over strings: FNV-1a base hash, double hashing,
+  * `Long`-word bitset. No false negatives by construction. It is the
+  * per-shard filter of [[ShardedBloom]] (A9), which builds, writes and
+  * probes one per url-hash shard; the driver never holds the set.
   */
 final class Bloom(val bits: Array[Long], val numHashes: Int) extends Serializable {
 
@@ -95,49 +80,5 @@ object Bloom {
     var i = 0
     while (i < len) { bits(i) = bb.getLong; i += 1 }
     new Bloom(bits, k)
-  }
-
-  /** Typed Aggregator: partial per-partition build + tree merge in Catalyst. */
-  final class BloomAgg(expectedItems: Long, fpp: Double)
-      extends Aggregator[String, Bloom, Array[Byte]] {
-    def zero: Bloom = create(expectedItems, fpp)
-    def reduce(b: Bloom, url: String): Bloom = { if (url != null) b.add(url); b }
-    def merge(a: Bloom, b: Bloom): Bloom = a.mergeInPlace(b)
-    def finish(b: Bloom): Array[Byte] = b.serialize
-    def bufferEncoder: Encoder[Bloom] = Encoders.kryo[Bloom]
-    def outputEncoder: Encoder[Array[Byte]] = Encoders.BINARY
-  }
-
-  /** Build a bloom over a url column, distributed. */
-  def build(spark: SparkSession, urls: DataFrame, urlCol: String,
-      expectedItems: Long, fpp: Double = 0.01): Bloom = {
-    import spark.implicits._
-    val ds = urls.select(col(urlCol)).as[String]
-    val agg = new BloomAgg(expectedItems, fpp)
-    val bytes = ds.select(agg.toColumn.name("bloom")).head()
-    deserialize(bytes)
-  }
-
-  /** mightContain as a Column against a broadcast serialized bloom. */
-  def mightContainCol(spark: SparkSession, bloom: Bloom, c: Column): Column = {
-    val b = spark.sparkContext.broadcast(bloom.serialize)
-    val f = udf { (s: String) =>
-      if (s == null) false else BloomCache.get(b.value).mightContain(s)
-    }
-    f(c)
-  }
-}
-
-/** Per-executor deserialized-bloom cache (avoid re-parsing per row). */
-object BloomCache {
-  @transient @volatile private var cached: (Array[Byte], Bloom) = null
-  def get(bytes: Array[Byte]): Bloom = {
-    val c = cached
-    if (c != null && (c._1 eq bytes)) c._2
-    else {
-      val b = Bloom.deserialize(bytes)
-      cached = (bytes, b)
-      b
-    }
   }
 }

@@ -26,14 +26,13 @@ final class SerializableHadoopConf(@transient var value: Configuration)
 
 /** Sharded distributed URL-seen set (A9 at 10^10-url scale).
   *
-  * Round 1 materialized ONE Bloom filter on the driver (`.head()` of the
-  * aggregate) — at a 10^10-url frontier a 1%-fpp filter is ~12 GB through
-  * driver memory and a single broadcast. This implementation shards by url
-  * hash range:
+  * One driver-held filter does not scale — at a 10^10-url frontier a
+  * 1%-fpp filter is ~12 GB through driver memory and a single broadcast —
+  * so the set is sharded by url hash range:
   *
   *   - build: one `groupByKey(shard)` aggregation — per-partition partial
-  *     Bloom buffers merged in Catalyst's tree (same typed Aggregator as the
-  *     single-shard path), one output row per shard, each shard's bitset
+  *     Bloom buffers merged in Catalyst's tree (a typed Aggregator), one
+  *     output row per shard, each shard's bitset
   *     written to its own file by the executor that owns it. The driver
   *     never holds a filter. Every shard id gets a file (empty shards
   *     included), so an absent file at probe time is an ERROR (wrong dir /
@@ -42,21 +41,18 @@ final class SerializableHadoopConf(@transient var value: Configuration)
   *     mightContain`. Executors lazily load only the shard files their rows
   *     touch (per-JVM cache); repartitioning candidates by shard makes each
   *     task touch exactly one shard. No broadcast of the full filter set.
-  *   - merge: delta waves OR their shard bitsets into the previous version's
-  *     files executor-side (same geometry), then publish a new version dir —
-  *     the MOR pattern for filter state.
   *
-  * Each complete shard dir records its geometry in a `_geometry` file,
-  * written after the shards; readers validate it before probing.
+  * A dir holds one build: the caller that probes it passes the same shard
+  * count it was built with (a different count hashes urls to the wrong
+  * shard). The crawl wave does not use it — its URL-seen check is the
+  * exact `Scheduler.hashProbeNewUrls` against a urls slice it already
+  * holds, which a prefilter cannot save a read of. The operator serves the
+  * `a9_bloom_seen` catalog query and the benchmark's URL-seen kernel.
   *
   * Multi-node requirement: shard dirs must live on storage every executor
-  * can reach (the TableStore root / defaultFS) — the Scheduler roots them
-  * under `store.rootPath`, and all I/O goes through the session's Hadoop
+  * can reach (defaultFS), and all I/O goes through the session's Hadoop
   * configuration (SerializableHadoopConf) so executors resolve the same FS
   * as the driver.
-  *
-  * Replaces sentry's in-memory `enqued` map (crawler.go:27-29) as the
-  * scalable prefilter; exactness still comes from the anti-join confirm.
   */
 object ShardedBloom {
 
@@ -88,13 +84,11 @@ object ShardedBloom {
   def shardFile(dir: String, shard: Int): String = s"$dir/shard-$shard.bloom"
 
   /** Build per-shard Blooms over `urls(urlCol)` and write one file per
-    * shard under `dir`, optionally OR-merging the same shard's bits from
-    * `prevDir` (must share geometry). Executor-side writes through the
-    * session's Hadoop conf; the driver only triggers the job and fills in
-    * files for empty shards (so the full geometry is always on disk). */
+    * shard under `dir`. Executor-side writes through the session's Hadoop
+    * conf; the driver only triggers the job and fills in files for empty
+    * shards (so every shard id is on disk). */
   def buildToDir(spark: SparkSession, urls: DataFrame, urlCol: String,
-      shards: Int, perShardItems: Long, fpp: Double, dir: String,
-      prevDir: Option[String] = None): Unit = {
+      shards: Int, perShardItems: Long, fpp: Double, dir: String): Unit = {
     import spark.implicits._
     val sconf = new SerializableHadoopConf(spark.sparkContext.hadoopConfiguration)
     val (fsys, base) = fs(dir, sconf.value)
@@ -107,58 +101,26 @@ object ShardedBloom {
       .agg(agg.toColumn.name("bloom"))
     sharded.foreachPartition { (it: Iterator[(Int, Array[Byte])]) =>
       it.foreach { case (shard, bytes) =>
-        val bloom = Bloom.deserialize(bytes)
-        val merged = prevDir.flatMap(p => readShard(p, shard, sconf.value)) match {
-          case Some(prev) => prev.mergeInPlace(bloom)
-          case None       => bloom
-        }
-        writeShard(dir, shard, merged, sconf.value)
+        writeShard(dir, shard, bytes, sconf.value)
       }
     }
-    // shards with no new urls carry forward from prevDir; shards with no
-    // urls at all still get a (tiny empty) file so probe-time absence is
-    // unambiguous — missing file = wrong dir or invisible storage, fail loud
-    val emptyShard = Bloom.create(perShardItems, fpp)
+    // shards with no urls still get a (tiny empty) file so probe-time
+    // absence is unambiguous — missing file = wrong dir or invisible
+    // storage, fail loud
+    val emptyShard = Bloom.create(perShardItems, fpp).serialize
     (0 until shards).foreach { shard =>
-      if (!fsys.exists(new Path(shardFile(dir, shard)))) {
-        prevDir.flatMap(p => readShard(p, shard, sconf.value)) match {
-          case Some(prev) => writeShard(dir, shard, prev, sconf.value)
-          case None       => writeShard(dir, shard, emptyShard, sconf.value)
-        }
-      }
-    }
-    // geometry last: a dir without it (an interrupted build) never validates
-    val out = fsys.create(new Path(geometryFile(dir)), true)
-    try out.write(s"$shards $perShardItems $fpp".getBytes("UTF-8")) finally out.close()
-  }
-
-  private def geometryFile(dir: String): String = s"$dir/_geometry"
-
-  /** The (shards, per-shard items, fpp) a complete shard dir was built with;
-    * None for a missing or unfinished dir. Probing with any other geometry
-    * hashes urls to the wrong shard or bit positions — silent false
-    * negatives — so callers rebuild on a mismatch. */
-  def geometry(spark: SparkSession, dir: String): Option[(Int, Long, Double)] = {
-    val (fsys, _) = fs(dir, spark.sparkContext.hadoopConfiguration)
-    val p = new Path(geometryFile(dir))
-    if (!fsys.exists(p)) None
-    else {
-      val in = fsys.open(p)
-      val txt = try new String(in.readAllBytes(), "UTF-8") finally in.close()
-      txt.trim.split(" ") match {
-        case Array(s, n, f) => Some((s.toInt, n.toLong, f.toDouble))
-        case _ => None
-      }
+      if (!fsys.exists(new Path(shardFile(dir, shard))))
+        writeShard(dir, shard, emptyShard, sconf.value)
     }
   }
 
-  private[crawl] def writeShard(dir: String, shard: Int, bloom: Bloom,
+  private[crawl] def writeShard(dir: String, shard: Int, bytes: Array[Byte],
       conf: Configuration): Unit = {
     val (fsys, _) = fs(dir, conf)
     val target = new Path(shardFile(dir, shard))
     val tmp = new Path(shardFile(dir, shard) + ".tmp")
     val out = fsys.create(tmp, true)
-    try out.write(bloom.serialize) finally out.close()
+    try out.write(bytes) finally out.close()
     if (fsys.exists(target)) fsys.delete(target, false) // idempotent retry
     fsys.rename(tmp, target)
   }
@@ -181,8 +143,8 @@ object ShardedBloom {
 
   /** Column probe: true iff the url's shard filter might contain it. Shard
     * files load lazily per executor via ShardRegistry through the session's
-    * Hadoop conf. With `requireShards` (the Scheduler's mode — builds write
-    * every shard id), a missing shard file throws instead of resolving to
+    * Hadoop conf. With `requireShards` (builds write every shard id), a
+    * missing shard file throws instead of resolving to
     * an empty filter: silence there would be a bloom false negative that
     * re-creates seen urls and clobbers their fetch state. */
   def mightContainCol(spark: SparkSession, dir: String, shards: Int,
@@ -214,10 +176,9 @@ object ShardedBloom {
 
 /** Per-JVM lazy shard-filter cache; missing files resolve to an empty
   * filter unless `require` is set (then they throw). Bounded: once the
-  * cache exceeds 256 entries, entries from OTHER version dirs are evicted
-  * (new wave = new version dir = new keys) — never the requested version's
-  * shards, so a rollover doesn't thunder-herd re-reads of the live
-  * filters. */
+  * cache exceeds 256 entries, entries from OTHER dirs are evicted (a new
+  * build = a new dir = new keys) — never the requested dir's shards, so a
+  * rollover doesn't thunder-herd re-reads of the live filters. */
 object ShardRegistry {
   private val empty = new Bloom(new Array[Long](1), 1)
   private val cache = new java.util.concurrent.ConcurrentHashMap[String, Bloom]()

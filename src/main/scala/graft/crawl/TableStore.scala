@@ -38,7 +38,7 @@ import java.nio.charset.StandardCharsets
   */
 final class TableStore(spark: SparkSession, rootDir: String) {
 
-  /** Store root (shard-file state like the seen-bloom lives beside tables). */
+  /** Store root: one dir per table, `_manifest.json` and `_snapshots/`. */
   def rootPath: String = rootDir
 
   private val root: Path = Paths.get(rootDir)
@@ -254,11 +254,6 @@ final class TableStore(spark: SparkSession, rootDir: String) {
   def stageRewrite(table: String, df: DataFrame): Long =
     stage(Seq(TableStore.Delta(table, df, rewrite = true))).head.version
 
-  /** Reserve a fresh version directory for non-parquet state kept beside the
-    * tables (the seen-bloom shard files), with rewrite semantics: on commit
-    * the manifest references only this version. */
-  def stageDir(name: String): String = freshDir(tableDir(name, reserve(name, rewrite = true)))
-
   /** An empty directory for a reserved version: a dir already there is an
     * orphan of a wave that died before commit, and its files must not leak
     * into the new version. */
@@ -269,10 +264,6 @@ final class TableStore(spark: SparkSession, rootDir: String) {
     Files.createDirectories(dir)
     dir.toString
   }
-
-  /** The committed version directory of a `stageDir` state, if any. */
-  def committedDir(name: String): Option[String] =
-    committed.get(name).flatMap(_.lastOption).map(v => tableDir(name, v).toString)
 
   /** Atomically publish all staged versions as wave `wave`. Besides the
     * live `_manifest.json` pointer, the same content is written as an

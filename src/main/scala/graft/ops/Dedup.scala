@@ -418,7 +418,7 @@ object Dedup {
       .unionByName(init.select(col("v").as("doc_id"))).distinct()
     // round-scoped checkpoints: each round's edge set replaces the last —
     // free the superseded blocks instead of accumulating one copy per round
-    val ic = new IterCheckpoint(pairs.sparkSession)
+    val ic = new IterCheckpoint
     var edges = ic.next(init.filter(col("u") =!= col("v"))
       .select(greatest(col("u"), col("v")).as("u"),
         least(col("u"), col("v")).as("v"))

@@ -58,7 +58,6 @@ object Graph {
   def pageRank(edges: DataFrame, iters: Int, damping: Double = 0.85): DataFrame =
     // narrow (long, long/double) rows every round: data-sized reduce layout
     AdaptiveShuffle.narrowRows(edges.sparkSession) {
-    val spark = edges.sparkSession
     val e = edges.select(col("src").cast("long").as("src"),
       col("dst").cast("long").as("dst")).distinct().localCheckpoint(true)
     val nodes = e.select(col("src").as("id"))
@@ -71,7 +70,7 @@ object Graph {
 
     // round-scoped checkpoints: each round's ranks supersede the last —
     // free the old blocks instead of accumulating one node-set copy/round
-    val ic = new IterCheckpoint(spark)
+    val ic = new IterCheckpoint
     var ranks = ic.next(nodes.withColumn("rank", lit(1.0 / n)))
     for (_ <- 1 to iters) {
       val contribs = we.join(ranks, we("src") === ranks("id"))
@@ -128,7 +127,7 @@ object Graph {
       .select(col("src"), col("dst"), (lit(102L) / col("d")).cast("long").as("w"))
       .localCheckpoint(true)
 
-    val ic = new IterCheckpoint(edges.sparkSession)
+    val ic = new IterCheckpoint
     var ranks = ic.next(nodes.withColumn("s", lit(1L)))
     var unit = 1L // 120^k: the teleport term 18 * 120^k
     for (_ <- 1 to iters) {
@@ -183,7 +182,7 @@ object Graph {
       .select(col("src"), col("dst"), (lit(102L) / col("d")).cast("long").as("w"))
       .localCheckpoint(true)
 
-    val ic = new IterCheckpoint(edges.sparkSession)
+    val ic = new IterCheckpoint
     var ranks = ic.next(flagged
       .select(col("id"), when(col("is_seed"), lit(1L)).otherwise(lit(0L)).as("s")))
     var unit = 1L // 120^k: the per-round seed teleport term 18 * 120^k
@@ -218,8 +217,8 @@ object Graph {
       col("dst").cast("long").as("dst")).distinct().localCheckpoint(true)
     // two round-scoped tracks: frontier(k) replaces frontier(k-1) once
     // expanded, visited(k) replaces visited(k-1) once unioned
-    val icF = new IterCheckpoint(edges.sparkSession)
-    val icV = new IterCheckpoint(edges.sparkSession)
+    val icF = new IterCheckpoint
+    val icV = new IterCheckpoint
     var visited = icV.next(seeds.select(col("id").cast("long").as("id")).distinct()
       .withColumn("depth", lit(0)))
     var frontier = visited
@@ -269,8 +268,8 @@ object Graph {
     require((BigInt(dOut) * BigInt(dIn)).pow(iters) <= BigInt(Long.MaxValue) / 4,
       s"hitsScaled overflows: (dmaxOut=$dOut * dmaxIn=$dIn)^$iters exceeds Long range")
 
-    val icH = new IterCheckpoint(edges.sparkSession)
-    val icA = new IterCheckpoint(edges.sparkSession)
+    val icH = new IterCheckpoint
+    val icA = new IterCheckpoint
     var a = nodes.withColumn("v", lit(1L))
     var h: DataFrame = null
     for (_ <- 1 to iters) {
@@ -307,7 +306,7 @@ object Graph {
   def resolveRedirects(redirects: DataFrame, hopCap: Int = 32): DataFrame =
     AdaptiveShuffle.narrowRows(redirects.sparkSession) {
     require(hopCap >= 1, s"hopCap must be positive (got $hopCap)")
-    val ic = new IterCheckpoint(redirects.sparkSession)
+    val ic = new IterCheckpoint
     var f = ic.next(redirects.groupBy(col("src")).agg(min(col("dst")).as("dst")))
     val rounds = math.ceil(math.log(hopCap.toDouble) / math.log(2.0)).toInt
     for (_ <- 0 until rounds) {

@@ -1,6 +1,8 @@
 package graft.ops
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
+import graft.crawl.Scheduler
 
 /** Round-scoped localCheckpoint for iterative DataFrame algorithms
   * (PageRank, connected components, BFS): checkpoint the new round's frame
@@ -12,14 +14,16 @@ import org.apache.spark.sql.DataFrame
   * ContextCleaner pass, which a large-heap driver may never run). An
   * iterative op that checkpoints every round therefore accumulates one
   * full copy of its state per round: at 10^10 nodes × 20 rounds that is
-  * 20 node-set copies spilled across executor disks. The cure is the same
-  * as the Scheduler's per-wave watermark: track exactly the persistent-RDD
-  * ids each checkpoint created and drop them as soon as the NEXT round's
-  * checkpoint (derived from them) is materialized.
+  * 20 node-set copies spilled across executor disks. The cure: record the
+  * RDDs each checkpoint holds its rows in (`Scheduler.checkpointRdds`, read
+  * off the checkpoint's own plan) and drop exactly those as soon as the
+  * NEXT round's checkpoint (derived from them) is materialized. Nothing
+  * another thread persists meanwhile is touched: a local checkpoint whose
+  * blocks are freed cannot be recomputed.
   */
-private[ops] final class IterCheckpoint(spark: org.apache.spark.sql.SparkSession) {
+private[ops] final class IterCheckpoint {
 
-  private var lastIds: Set[Int] = Set.empty
+  private var last: Seq[RDD[_]] = Nil
 
   /** Eagerly checkpoint `df`, then free the blocks of the PREVIOUS frame
     * this instance checkpointed (safe: the new checkpoint is already
@@ -27,12 +31,9 @@ private[ops] final class IterCheckpoint(spark: org.apache.spark.sql.SparkSession
     * caller must keep across all rounds (edge lists, node catalogs)
     * should use a plain `localCheckpoint(true)`, not this. */
   def next(df: DataFrame): DataFrame = {
-    val sc = spark.sparkContext
-    val before = sc.getPersistentRDDs.keySet
     val ck = df.localCheckpoint(true)
-    val created = sc.getPersistentRDDs.keySet -- before
     free()
-    lastIds = created.toSet
+    last = Scheduler.checkpointRdds(ck)
     ck
   }
 
@@ -40,8 +41,7 @@ private[ops] final class IterCheckpoint(spark: org.apache.spark.sql.SparkSession
     * been consumed or re-materialized — NOT before returning a frame that
     * still reads them). */
   def free(): Unit = {
-    val rdds = spark.sparkContext.getPersistentRDDs
-    lastIds.foreach(id => rdds.get(id).foreach(_.unpersist(blocking = false)))
-    lastIds = Set.empty
+    last.foreach(_.unpersist(blocking = false))
+    last = Nil
   }
 }

@@ -22,9 +22,9 @@ object StreamingOps {
     * is seen; re-sights within the watermark window are dropped exactly,
     * and state for urls older than the watermark is evicted — so the state
     * store holds O(urls per watermark window), not the full crawl history
-    * (the full history belongs to the batch-side urls table + sharded
-    * bloom; a deployment composes both: stream-dedup bounds the enqueue
-    * storm, the wave's exact anti-join against the store is authoritative).
+    * (the full history belongs to the batch-side urls table; a deployment
+    * composes both: stream-dedup bounds the enqueue storm, the wave's exact
+    * anti-join against the store is authoritative).
     */
   def seenDedupStream(links: DataFrame, tsCol: String,
       watermarkDelay: String): DataFrame =

@@ -156,49 +156,6 @@ class ApiCrawlSpec extends AnyFunSuite {
     assert(s.seedUrl(u), "seed must succeed once the block is deleted")
   }
 
-  test("a wave prunes superseded seen_bloom dirs; only the live dir remains") {
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    val store = new TableStore(spark, SparkTestBase.tempDir("api-bloom-prune"))
-    val s = new Scheduler(spark, store, CrawlConfig(compactEvery = 0))
-    s.bootstrap(
-      Fixtures.pagesDF(spark, Fixtures.staticSitePages),
-      Fixtures.sourcesDF(spark, Fixtures.staticSiteSources))
-    s.run(maxWaves = 40)
-    val bloomBase = java.nio.file.Paths.get(s"${store.rootPath}/seen_bloom")
-    import scala.jdk.CollectionConverters._
-    val dirs = java.nio.file.Files.list(bloomBase).iterator().asScala
-      .filter(java.nio.file.Files.isDirectory(_)).toSeq
-    assert(dirs.size == 1,
-      s"expected exactly the live shard dir, found: ${dirs.map(_.getFileName)}")
-    // the survivor is the dir the committed manifest references
-    assert(store.committedDir("seen_bloom").contains(dirs.head.toString))
-  }
-
-  test("reopening a store with a different bloomShards rebuilds the seen bloom") {
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    val dir = SparkTestBase.tempDir("api-bloom-geometry")
-    val first = new Scheduler(spark, new TableStore(spark, dir), CrawlConfig(bloomShards = 8))
-    first.bootstrap(
-      Fixtures.pagesDF(spark, Fixtures.staticSitePages),
-      Fixtures.sourcesDF(spark, Fixtures.staticSiteSources))
-    (0L to 1L).foreach(first.runWave)
-    val store = new TableStore(spark, dir)
-    val shardsBefore = new java.io.File(store.committedDir("seen_bloom").get)
-      .list().count(_.endsWith(".bloom"))
-    assert(shardsBefore == 8)
-    // probing 4 shards with an 8-shard filter would hash urls to the wrong
-    // shard; the reopened scheduler must rebuild at its own geometry
-    val reopened = new Scheduler(spark, store, CrawlConfig(bloomShards = 4))
-    reopened.run(maxWaves = 40)
-    val live = new java.io.File(store.committedDir("seen_bloom").get)
-    assert(live.list().filter(_.endsWith(".bloom")).sorted.toSeq ==
-      (0 until 4).map(i => s"shard-$i.bloom"))
-    def canon(s: Scheduler) = (
-      s.urlsView.selectExpr("concat(url,'|',status)").as[String].collect().sorted.toSeq,
-      s.linksView.selectExpr("concat(src,'|',dst)").as[String].collect().sorted.toSeq)
-    assert(canon(reopened) == canon(sched))
-  }
-
   test("compaction leaves all views unchanged (T6/Iceberg rewrite equivalence)") {
     val compacted = crawl(CrawlConfig(compactEvery = 2))
     def canon(s: Scheduler) = (

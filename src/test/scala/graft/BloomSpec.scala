@@ -4,8 +4,6 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.crawl._
 
 class BloomSpec extends AnyFunSuite {
-  private lazy val spark = SparkTestBase.spark
-  import spark.implicits._
 
   test("no false negatives (property over 200 random sets)") {
     val rnd = new scala.util.Random(42)
@@ -33,35 +31,10 @@ class BloomSpec extends AnyFunSuite {
     assert(fp < 300, s"fp rate too high: $fp/10000")
   }
 
-  test("distributed Aggregator build == local build membership") {
-    val urls = (0 until 2000).map(i => s"http://h$i.example.com/p")
-    val built = Bloom.build(spark, urls.toDF("url"), "url", 4096)
-    urls.foreach(u => assert(built.mightContain(u)))
-  }
-
   test("merge is a bitwise union") {
     val a = Bloom.create(1000); val b = Bloom.create(1000)
     a.add("only-a"); b.add("only-b")
     val m = a.mergeInPlace(b)
     assert(m.mightContain("only-a") && m.mightContain("only-b"))
-  }
-
-  test("crawl with bloom prefilter produces identical outputs to exact-only") {
-    def crawl(useBloom: Boolean): (Seq[String], Seq[String]) = {
-      spark.conf.set("spark.sql.shuffle.partitions", "4")
-      val store = new TableStore(spark, SparkTestBase.tempDir("bloomcrawl"))
-      val sched = new Scheduler(spark, store, CrawlConfig(useBloomPrefilter = useBloom))
-      sched.bootstrap(
-        Fixtures.pagesDF(spark, Fixtures.staticSitePages),
-        Fixtures.sourcesDF(spark, Fixtures.staticSiteSources))
-      sched.run(maxWaves = 40)
-      (sched.urlsView.select("url").as[String].collect().sorted.toSeq,
-        sched.fetchLogView.selectExpr("concat(wave,'|',vt,'|',host,'|',url,'|',outcome)")
-          .as[String].collect().sorted.toSeq)
-    }
-    val withBloom = crawl(useBloom = true)
-    val exact = crawl(useBloom = false)
-    assert(withBloom._1 == exact._1, "urls differ with bloom prefilter")
-    assert(withBloom._2 == exact._2, "crawl order differs with bloom prefilter")
   }
 }

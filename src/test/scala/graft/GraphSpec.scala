@@ -215,6 +215,36 @@ class GraphSpec extends AnyFunSuite {
       s"connectedComponents left ${live - after1} persistent RDDs (want <=3)")
   }
 
+  test("a frame another thread local-checkpoints while pageRank runs keeps its blocks") {
+    // pageRank frees each superseded round's checkpoint; it must free only
+    // its own RDDs, never one another thread persisted meanwhile — a local
+    // checkpoint whose blocks are freed cannot be recomputed
+    val theirs = new java.util.concurrent.ConcurrentLinkedQueue[
+      (org.apache.spark.sql.DataFrame, Seq[org.apache.spark.rdd.RDD[_]])]()
+    @volatile var running = true
+    val other = new Thread(() => {
+      var i = 0L
+      while (running) {
+        val ck = spark.range(0L, 100L + i).toDF("x").localCheckpoint(true)
+        theirs.add((ck, ck.queryExecution.logical.collect {
+          case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
+        }))
+        i += 1
+      }
+    })
+    other.start()
+    try Graph.pageRank(edges, iters = 12).count()
+    finally { running = false; other.join() }
+    import scala.jdk.CollectionConverters._
+    val cks = theirs.asScala.toSeq
+    assert(cks.size > 1, "the other thread checkpointed nothing during pageRank")
+    val freed = cks.filterNot(_._2.forall(_.getStorageLevel.isValid))
+    assert(freed.size == 0,
+      s"pageRank freed ${freed.size} of ${cks.size} checkpoints it did not make")
+    cks.zipWithIndex.foreach { case ((ck, _), i) => assert(ck.count() == 100L + i) }
+    cks.foreach(_._2.foreach(_.unpersist()))
+  }
+
   test("resolveRedirects: hop cap bounds chain length like a real fetcher") {
     // 40-hop chain: n0 -> n01 -> ... -> n40 (zero-padded so min-dst is a no-op)
     val chain = (0 until 40).map(i => (f"n$i%02d", f"n${i + 1}%02d")).toDF("src", "dst")

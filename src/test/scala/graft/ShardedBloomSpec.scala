@@ -37,20 +37,6 @@ class ShardedBloomSpec extends AnyFunSuite {
     assert(fp8 < 100, s"sharded fp rate too high: $fp8/2000")
   }
 
-  test("delta merge carries forward unchanged shards and ORs touched ones") {
-    val dirA = SparkTestBase.tempDir("sbloomA")
-    val dirB = SparkTestBase.tempDir("sbloomB")
-    val first = (0 until 500).map(i => s"http://a$i/")
-    val delta = (0 until 500).map(i => s"http://b$i/")
-    ShardedBloom.buildToDir(spark, first.toDF("url"), "url", 4, 512, 0.01, dirA)
-    ShardedBloom.buildToDir(spark, delta.toDF("url"), "url", 4, 512, 0.01, dirB,
-      prevDir = Some(dirA))
-    (first ++ delta).foreach { u =>
-      assert(ShardRegistry.get(dirB, ShardedBloom.shardOf(u, 4)).mightContain(u),
-        s"lost $u after delta merge")
-    }
-  }
-
   test("missing shard file means definitely-new (empty filter)") {
     val dir = SparkTestBase.tempDir("sbloom-empty")
     assert(!ShardRegistry.get(dir, 3).mightContain("http://x/"))
@@ -101,25 +87,5 @@ class ShardedBloomSpec extends AnyFunSuite {
     (0 until 4).foreach(sh => ShardRegistry.get(dirA, sh))
     assert(ShardRegistry.loads.get() == before,
       "live-version shards were re-read after eviction")
-  }
-
-  test("crawl with sharded bloom == exact-only crawl (scheduler equivalence)") {
-    def crawl(useBloom: Boolean): (Seq[String], Seq[String]) = {
-      spark.conf.set("spark.sql.shuffle.partitions", "4")
-      val store = new TableStore(spark, SparkTestBase.tempDir("sbloomcrawl"))
-      val sched = new Scheduler(spark, store,
-        CrawlConfig(useBloomPrefilter = useBloom, bloomShards = 4))
-      sched.bootstrap(
-        Fixtures.pagesDF(spark, Fixtures.staticSitePages),
-        Fixtures.sourcesDF(spark, Fixtures.staticSiteSources))
-      sched.run(maxWaves = 40)
-      (sched.urlsView.select("url").as[String].collect().sorted.toSeq,
-        sched.fetchLogView.selectExpr("concat(wave,'|',vt,'|',host,'|',url,'|',outcome)")
-          .as[String].collect().sorted.toSeq)
-    }
-    val withBloom = crawl(useBloom = true)
-    val exact = crawl(useBloom = false)
-    assert(withBloom._1 == exact._1, "urls differ with sharded bloom prefilter")
-    assert(withBloom._2 == exact._2, "crawl order differs with sharded bloom prefilter")
   }
 }

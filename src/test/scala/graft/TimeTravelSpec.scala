@@ -41,6 +41,25 @@ class TimeTravelSpec extends AnyFunSuite {
       assert(store.asOf(w).isDefined, s"wave $w unreadable")
     }
     assert(store.asOf(store.currentWave + 100).isEmpty, "phantom future snapshot")
+    // version dirs are never deleted, only superseded: every dir a
+    // snapshot's manifest names is still on disk (read off the snapshot
+    // files themselves, not through the store's parser)
+    val entry = "\"([^\"]+)\"\\s*:\\s*\\[([0-9,\\s]*)\\]".r
+    val snapDir = java.nio.file.Paths.get(store.rootPath, "_snapshots")
+    waves.foreach { w =>
+      val json = new String(java.nio.file.Files.readAllBytes(
+        snapDir.resolve(f"w$w%012d.json")), "UTF-8")
+      val named = entry.findAllMatchIn(json.split("\"tables\":", 2)(1)).flatMap { m =>
+        m.group(2).split(",").map(_.trim).filter(_.nonEmpty).map(v => (m.group(1), v.toLong))
+      }.toSeq
+      assert(named.nonEmpty, s"wave $w manifest names no version")
+      val missing = named.filterNot { case (t, v) =>
+        java.nio.file.Files.isDirectory(java.nio.file.Paths.get(store.versionPath(t, v)))
+      }
+      assert(missing.isEmpty, s"wave $w manifest names deleted version dirs: $missing")
+    }
+    // the URL-seen check keeps no state of its own beside the tables
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(store.rootPath, "seen_bloom")))
   }
 
   test("urlsViewAsOf(w) equals a crawl truncated at wave w (deterministic replay)") {
