@@ -100,6 +100,16 @@ object SparkEntry {
       |   FROM q CROSS JOIN v) ranked
       | WHERE rank <= 10""".stripMargin.replace("\n", "")
 
+  /** `img` as PNG bytes, through a memory-cached stream opened for this
+    * call (ImageIO's default cache is a temp file per stream). */
+  private def pngBytes(img: java.awt.image.BufferedImage): Array[Byte] = {
+    val bos = new java.io.ByteArrayOutputStream()
+    val ios = new javax.imageio.stream.MemoryCacheImageOutputStream(bos)
+    javax.imageio.ImageIO.write(img, "png", ios)
+    ios.close()
+    bos.toByteArray
+  }
+
   /** Deterministic PNG bytes per doc: a width x height black RGB image with
     * doc_id-derived dimensions, encoded by the JDK PNG writer. The m1 query
     * decodes these back with the REAL javax.imageio header path. */
@@ -108,9 +118,7 @@ object SparkEntry {
     val h = 8 + (id % 16).toInt
     val img = new java.awt.image.BufferedImage(w, h,
       java.awt.image.BufferedImage.TYPE_INT_RGB)
-    val bos = new java.io.ByteArrayOutputStream()
-    javax.imageio.ImageIO.write(img, "png", bos)
-    bos.toByteArray
+    pngBytes(img)
   }
 
   /** 9x8 PNGs with doc_id-derived COLUMN patterns (increasing / decreasing /
@@ -134,9 +142,7 @@ object SparkEntry {
       }
       y += 1
     }
-    val bos = new java.io.ByteArrayOutputStream()
-    javax.imageio.ImageIO.write(img, "png", bos)
-    bos.toByteArray
+    pngBytes(img)
   }
 
   /** 9x8 PNGs whose dHash equals a CONSTRUCTED 64-bit signature: groups of
@@ -165,9 +171,7 @@ object SparkEntry {
       }
       y += 1
     }
-    val bos = new java.io.ByteArrayOutputStream()
-    javax.imageio.ImageIO.write(img, "png", bos)
-    bos.toByteArray
+    pngBytes(img)
   }
 
   /** Deterministic WAV header bytes: byteRate 1000 B/s, declared data-chunk

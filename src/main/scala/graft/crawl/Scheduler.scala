@@ -164,78 +164,10 @@ final class Scheduler(spark: SparkSession, store: TableStore, cfg: CrawlConfig) 
   private def emptyDF[T <: Product : org.apache.spark.sql.Encoder]: DataFrame =
     spark.emptyDataset[T].toDF()
 
-  /** Per-instance cached empty frames: deriving a Product ExpressionEncoder
-    * is runtime reflection (hundreds of ms) and the wave loop needs these
-    * constants every wave — pay the derivation once, not once per wave. */
-  private lazy val emptyFrontierDF: DataFrame = emptyDF[FrontierRow]
-  private lazy val emptyHostStateDF: DataFrame = emptyDF[HostStateRow]
-
-  /** frontier merge-on-read view: latest (f_wave, f_prio) transition per
-    * url wins; urls whose latest transition is `taken` have left the queue.
-    * Same layout as the urls table — waves APPEND O(delta) transition rows
-    * (seeds, takes, blocks, enqueues) and never rewrite the backlog; a
-    * pre-MOR snapshot (single rewrite version, no f_wave column) reads as
-    * wave-0 transitions, so resume from an old store keeps working.
-    *
-    * Read discipline (the round-3 read-amplification fix): a wave evaluates
-    * this view EXACTLY ONCE — `runWave` localCheckpoints it into
-    * `frontier0` and every in-wave consumer (queue gauge, budget slice,
-    * active-url set, seed anti-join) reads the checkpointed frame, so the
-    * transition log is scanned and latest-wins-shuffled once per wave, not
-    * once per consumer. Point lookups (`seedUrl`, `markUncrawlable`) never
-    * touch the full view: latest-wins-per-url commutes with a url filter,
-    * so `frontierRowsFor` filters the log down to one `fbucket` (files are
-    * clustered on it at write time — parquet stats skip the rest) BEFORE
-    * the window. */
-  private def frontierDF: DataFrame = frontierMorView(None)
-
-  /** Frontier-log schema backfill: pre-MOR files get wave-0 stamps,
-    * pre-bucketing files get their fbucket recomputed from the url,
-    * pre-priority logs score 0 (same read-side migration policy as the
-    * urls `ubucket`). Shared by the live view and time travel. */
-  private def frontierBackfill(df0raw: DataFrame): DataFrame = {
-    val stamped =
-      if (df0raw.columns.contains("f_wave"))
-        df0raw.withColumn("f_wave", coalesce($"f_wave", lit(0L)))
-          .withColumn("f_prio", coalesce($"f_prio", lit(0)))
-      else df0raw.withColumn("f_wave", lit(0L)).withColumn("f_prio", lit(0))
-    val bucketed =
-      if (stamped.columns.contains("fbucket"))
-        stamped.withColumn("fbucket", coalesce($"fbucket", bucketCol($"url")))
-      else stamped.withColumn("fbucket", bucketCol($"url"))
-    if (bucketed.columns.contains("prio_score"))
-      bucketed.withColumn("prio_score", coalesce($"prio_score", lit(0L)))
-    else bucketed.withColumn("prio_score", lit(0L))
-  }
-
-  /** Latest-wins MOR collapse of a (backfilled) frontier transition log —
-    * the ONE place the frontier's ordering contract lives. */
-  private def frontierLatestWins(log: DataFrame): DataFrame = {
-    val w = Window.partitionBy("url").orderBy(desc("f_wave"), desc("f_prio"))
-    log.withColumn("rn_", row_number().over(w)).filter($"rn_" === 1)
-      .drop("rn_", "f_wave", "f_prio", "fbucket")
-      .filter($"state" =!= StateTaken)
-  }
-
-  private def frontierLog: Option[DataFrame] =
-    store.readAppendOnly("frontier").map(frontierBackfill)
-
-  private def frontierMorView(onlyUrl: Option[String]): DataFrame =
-    frontierLog match {
-      case None => emptyFrontierDF
-      case Some(log) =>
-        val df0 = onlyUrl match {
-          case Some(u) =>
-            log.filter($"fbucket" === urlBucketOf(u) && $"url" === u)
-          case None => log
-        }
-        frontierLatestWins(df0)
-    }
-
-  /** Live frontier rows for one url — a bucket-pruned point read of the
-    * transition log (the filter commutes with latest-wins-per-url). */
-  private def frontierRowsFor(url: String): DataFrame =
-    frontierMorView(Some(url))
+  /** Hash bucket of a url: the bucket column of the urls and frontier
+    * tables. */
+  private def bucketCol(c: Column): Column =
+    pmod(xxhash64(c), lit(cfg.urlBuckets)).cast("int")
 
   /** xxhash64 bucket of one url, computed driver-side by EVALUATING the
     * same Catalyst expression `bucketCol` builds (XxHash64 seed 42 +
@@ -255,6 +187,170 @@ final class Scheduler(spark: SparkSession, store: TableStore, cfg: CrawlConfig) 
     b.eval(null).asInstanceOf[Int]
   }
 
+  /** A merge-on-read table (Iceberg MOR equivalent): every write APPENDS
+    * rows stamped with their wave and a priority within it, never
+    * rewriting the backlog, and a reader keeps the newest row per `key` by
+    * `stamps`, descending. That rule is the whole table format of urls,
+    * frontier and host_state; every reader and writer of the three is
+    * derived here.
+    *
+    * Files written before a column existed backfill on read (parquet
+    * schema union reads them as nulls; a single-schema read lacks the
+    * column): stamps read as 0, the bucket is recomputed from the url and
+    * each of `defaults` reads as its value. Every writer stamps a priority
+    * >= 1, so an unstamped row loses every tie to a stamped one of its
+    * wave. `live` is the filter a winner passes to stay in the live view
+    * and in a compacted table.
+    *
+    * A bucketed table keeps `bucket` = xxhash64(url) mod urlBuckets as a
+    * data column, sorted inside each file at write time. Latest-wins per
+    * url commutes with a filter on the url or its bucket, so slice and
+    * point reads filter the log BEFORE the window, and parquet stats skip
+    * the other buckets' row groups: a wave that touches k urls reads
+    * O(k/B · table) rows, not O(table). */
+  private final class Mor(table: String, key: Seq[String], stamps: Seq[String],
+      bucket: Option[String], defaults: Seq[(String, Column)], live: Column,
+      emptyRows: => DataFrame) {
+
+    /** The empty live view. Deriving a Product encoder is runtime
+      * reflection (hundreds of ms), so it is paid once per instance. */
+    lazy val empty: DataFrame = emptyRows
+
+    private def stampCols(wave: Long, prio: Int): Seq[(String, Column)] =
+      stamps.zip(Seq(lit(wave), lit(prio))) ++ bucket.map(_ -> bucketCol(col("url")))
+
+    private def backfill(raw: DataFrame): DataFrame =
+      (stampCols(0L, 0) ++ defaults).foldLeft(raw) { case (df, (c, d)) =>
+        df.withColumn(c, if (df.columns.contains(c)) coalesce(col(c), d) else d)
+      }
+
+    /** The newest row per key, stamps kept. */
+    private def winners(log: DataFrame): DataFrame =
+      log.withColumn("rn_", row_number().over(
+        Window.partitionBy(key.map(col): _*).orderBy(stamps.map(desc): _*)))
+        .filter(col("rn_") === 1).drop("rn_")
+
+    private def bucketIn(bs: Seq[Int]): DataFrame => DataFrame =
+      _.filter(col(bucket.get).isin(bs: _*))
+
+    /** The live view over `src` (None: no such table), `slice` applied to
+      * the log before the window. */
+    def view(src: Option[DataFrame] = store.readAppendOnly(table),
+        slice: DataFrame => DataFrame = identity): DataFrame =
+      src.fold(empty)(raw =>
+        winners(slice(backfill(raw))).filter(live).drop(stamps ++ bucket: _*))
+
+    def buckets(bs: Seq[Int]): DataFrame = view(slice = bucketIn(bs))
+
+    def point(url: String): DataFrame =
+      view(slice = bucketIn(Seq(urlBucketOf(url))).andThen(_.filter(col("url") === url)))
+
+    /** Time travel (Iceberg VERSION AS OF): the live view over the version
+      * list committed at `wave`; None if `wave` was never committed or
+      * predates the snapshot log. */
+    def asOf(wave: Long): Option[DataFrame] =
+      store.asOf(wave).map(s => view(s.readAppendOnly(table)))
+
+    /** The write side: `df`'s rows stamped at (`wave`, `prio`), bucketed. */
+    def stamp(df: DataFrame, wave: Long, prio: Int = 0): DataFrame =
+      stampCols(wave, prio).foldLeft(df) { case (d, (c, v)) => d.withColumn(c, v) }
+
+    /** Incremental CDC read (Iceberg incremental-scan shape): every key
+      * whose newest row is stamped after `since`, as that row (`live` not
+      * applied: a consumer mirroring the table needs removals too) plus
+      * `changed_wave`. The delta's buckets are found first by a scan
+      * filtered on the RAW stamp column, so the predicate pushes into the
+      * parquet scan and version dirs written before `since` are skipped
+      * via their footer stats; for since >= 0 it equals the backfilled
+      * predicate, because a null stamp reads as 0, and for since < 0 every
+      * key has changed. The window then runs over those buckets only: a
+      * small delta reads O(delta/B · log) rows, never a full-table window.
+      * The ≤ urlBuckets collected ids mirror the wave loop's bucket set. */
+    def changedSince(since: Long): DataFrame = {
+      val wave = stamps.head
+      val none = empty.withColumn("changed_wave", lit(0L))
+      store.readAppendOnly(table).fold(none) { raw =>
+        val slice: Option[DataFrame => DataFrame] =
+          if (since < 0 || bucket.isEmpty) Some(identity)
+          else if (!raw.columns.contains(wave)) None
+          else backfill(raw.filter(col(wave) > since)).select(bucket.get).distinct()
+            .collect().map(_.getInt(0)).toSeq match {
+              case Seq() => None
+              case bs => Some(bucketIn(bs))
+            }
+        slice.fold(none)(s => winners(s(backfill(raw))).filter(col(wave) > since)
+          .withColumn("changed_wave", col(wave)).drop(stamps ++ bucket: _*))
+      }
+    }
+
+    /** The compaction rewrite (Iceberg rewrite_data_files): the live
+      * winners with their ORIGINAL stamps. Re-stamping them at the
+      * compaction wave made every CDC reader report the whole table as
+      * changed after each compaction; the original stamps stay
+      * latest-wins-safe, because later deltas are stamped at a strictly
+      * higher wave. Rows `live` rejects (the frontier's taken tombstones,
+      * and the rows they supersede) fold away: truncating history is the
+      * point of compaction. */
+    def compacted: DataFrame = {
+      val rows = store.readAppendOnly(table)
+        .fold(backfill(empty))(raw => winners(backfill(raw)).filter(live))
+      bucket.fold(rows)(b => rows.repartition(col(b)))
+    }
+  }
+
+  /** urls: one row per url, stamped (w_wave, w_prio): 1 = created (source
+    * roots, link dsts), 2 = fetched update. */
+  private val urlsMor = new Mor("urls", Seq("url"), Seq("w_wave", "w_prio"),
+    Some("ubucket"), Nil, lit(true), emptyDF[UrlRow])
+
+  /** frontier: the queue's transition log per url, stamped (f_wave,
+    * f_prio); a url whose newest transition is `taken` has left the queue.
+    * Rows written before priority mode score 0. */
+  private val frontierMor = new Mor("frontier", Seq("url"), Seq("f_wave", "f_prio"),
+    Some("fbucket"), Seq("prio_score" -> lit(0L)), col("state") =!= StateTaken,
+    emptyDF[FrontierRow])
+
+  /** host_state: politeness and robots state per (host, lane), stamped
+    * h_wave. A wave appends only the hosts it touched (bounded by the
+    * politeness budget), never the host catalog. */
+  private val hostMor = new Mor("host_state", Seq("host", "lane"), Seq("h_wave"),
+    None, Nil, lit(true), emptyDF[HostStateRow])
+
+  /** The urls live view: the newest row per url. */
+  def urlsView: DataFrame = urlsMor.view()
+
+  /** The urls live view of the given buckets only (all of them for None). */
+  def urlsViewBuckets(buckets: Option[Seq[Int]]): DataFrame =
+    buckets.fold(urlsView)(urlsMor.buckets)
+
+  /** The urls live view as committed at `wave`. */
+  def urlsViewAsOf(wave: Long): Option[DataFrame] = urlsMor.asOf(wave)
+
+  /** Every url whose live row was written after `sinceWave`: exactly the
+    * rows a consumer checkpointed at `sinceWave` must reprocess, with
+    * `changed_wave`, the stamp that superseded the consumer's view. */
+  def urlsChangedSince(sinceWave: Long): DataFrame = urlsMor.changedSince(sinceWave)
+
+  /** The committed frontier (GET /que view): queued and blocked commands.
+    *
+    * Read discipline: a wave evaluates this view EXACTLY ONCE — `runWave`
+    * localCheckpoints it into `frontier0` and every in-wave consumer
+    * (queue gauge, budget slice, active-url set, seed anti-join) reads the
+    * checkpointed frame, so the transition log is scanned and
+    * latest-wins-shuffled once per wave, not once per consumer. Point
+    * lookups (`seedUrl`, `markUncrawlable`) never touch the full view. */
+  def frontierView: DataFrame = frontierMor.view()
+
+  /** The frontier as committed at `wave`: the exact queue the scheduler
+    * saw after that wave's commit. */
+  def frontierViewAsOf(wave: Long): Option[DataFrame] = frontierMor.asOf(wave)
+
+  /** Frontier CDC: every url whose newest queue transition is stamped after
+    * `sinceWave`, with its `state` — INCLUDING `taken` evictions, which
+    * the live `frontierView` hides — and `changed_wave`. */
+  def frontierChangedSince(sinceWave: Long): DataFrame =
+    frontierMor.changedSince(sinceWave)
+
   /** Frontier transition priorities within one wave: a seed can be taken in
     * its own wave; a taken HEAD can be blocked; an eviction wins over all. */
   private val PrioSeed = 1
@@ -265,146 +361,6 @@ final class Scheduler(spark: SparkSession, store: TableStore, cfg: CrawlConfig) 
 
   /** Never-fetched / must-refetch staleness score: outranks any real age. */
   private val NeverFetchedScore = Long.MaxValue / 2
-
-  private def withFrontierMor(df: DataFrame, w: Long, prio: Int): DataFrame =
-    df.select("url", "method", "host", "lane", "wave", "seq", "state", "prio_score")
-      .withColumn("f_wave", lit(w)).withColumn("f_prio", lit(prio))
-      .withColumn("fbucket", bucketCol(col("url")))
-
-  /** host_state MOR view: latest transition per (host, lane) wins. Waves
-    * append only the hosts they touched (bounded by the politeness budget),
-    * never the full host catalog — at 10^7+ hosts the old per-wave rewrite
-    * was the last O(catalog) write. Pre-MOR snapshots read as wave 0. */
-  private def hostStateDF: DataFrame =
-    store.readAppendOnly("host_state") match {
-      case None => emptyHostStateDF
-      case Some(df0raw) =>
-        val df0 =
-          if (df0raw.columns.contains("h_wave"))
-            df0raw.withColumn("h_wave", coalesce($"h_wave", lit(0L)))
-          else df0raw.withColumn("h_wave", lit(0L))
-        val w = Window.partitionBy("host", "lane").orderBy(desc("h_wave"))
-        df0.withColumn("rn_", row_number().over(w)).filter($"rn_" === 1)
-          .drop("rn_", "h_wave")
-    }
-
-  /** urls hash bucket (partition column of the urls table). */
-  private def bucketCol(c: Column): Column =
-    pmod(xxhash64(c), lit(cfg.urlBuckets)).cast("int")
-
-  /** urls merge-on-read view: latest (wave, prio) row per url wins. */
-  def urlsView: DataFrame = urlsViewBuckets(None)
-
-  /** Bucket-pruned MOR view: with `buckets` set, the filter on the
-    * partition column prunes the parquet scan to just those directories
-    * (Iceberg bucket-partition pruning equivalent) BEFORE the dedup window —
-    * a wave that touches k urls reads O(k/B * table) rows, not O(table). */
-  def urlsViewBuckets(buckets: Option[Seq[Int]]): DataFrame =
-    urlsMorOver(store.readAppendOnly("urls"), buckets)
-
-  /** Time travel (Iceberg VERSION AS OF): the urls MOR view exactly as
-    * committed at `wave` — the same latest-wins read code over the
-    * historical manifest's version list. None if `wave` was never
-    * committed or predates the snapshot log. */
-  def urlsViewAsOf(wave: Long): Option[DataFrame] =
-    store.asOf(wave).map(s => urlsMorOver(s.readAppendOnly("urls"), None))
-
-  /** Incremental CDC read (Iceberg incremental-scan shape): every url whose
-    * CURRENT merge-on-read row was written after `sinceWave` — exactly the
-    * rows a downstream consumer checkpointed at `sinceWave` must reprocess.
-    * Returns the live row plus `changed_wave` (the stamp that superseded
-    * the consumer's view).
-    *
-    * Scale shape: the delta's BUCKETS are discovered first by a
-    * stamp-filtered scan (the `w_wave > since` predicate pushes into the
-    * parquet scan, and version dirs written before `since` are skipped
-    * whole via their max(w_wave) footer stats); the latest-wins window
-    * then runs only over those buckets' files (the steady-state wave
-    * treatment), so a small delta reads O(delta/B · log) rows — never a
-    * full-table window. Falls back to the full view naturally when the
-    * delta touches every bucket. The ≤`urlBuckets` collected ids mirror
-    * the wave loop's bucket collect. */
-  def urlsChangedSince(sinceWave: Long): DataFrame = {
-    store.readAppendOnly("urls") match {
-      case None => emptyDF[UrlRow].withColumn("changed_wave", lit(0L)).limit(0)
-      case Some(raw) =>
-        val df0 =
-          if (raw.columns.contains("ubucket"))
-            raw.withColumn("ubucket", coalesce($"ubucket", bucketCol($"url")))
-          else raw.withColumn("ubucket", bucketCol($"url"))
-        val touched = df0.filter($"w_wave" > sinceWave)
-          .select($"ubucket").distinct().collect().map(_.getInt(0)).toSeq
-        if (touched.isEmpty)
-          emptyDF[UrlRow].withColumn("changed_wave", lit(0L)).limit(0)
-        else {
-          val slice = df0.filter($"ubucket".isin(touched: _*))
-          val w = Window.partitionBy("url").orderBy(desc("w_wave"), desc("w_prio"))
-          slice.withColumn("rn_", row_number().over(w))
-            .filter($"rn_" === 1 && $"w_wave" > sinceWave)
-            .withColumn("changed_wave", $"w_wave")
-            .drop("rn_", "w_wave", "w_prio", "ubucket")
-        }
-    }
-  }
-
-  /** Frontier CDC — the queue-side twin of [[urlsChangedSince]]: every url
-    * whose latest queue TRANSITION is stamped after `sinceWave`, carrying
-    * the winning transition's `state` (INCLUDING `taken` evictions — a
-    * consumer mirroring the queue needs removals, which the live
-    * `frontierView` filters out) and `changed_wave`. Same bucket-discovery
-    * + pruned latest-wins shape: O(delta/B · log) read for a small delta. */
-  def frontierChangedSince(sinceWave: Long): DataFrame =
-    frontierLog match {
-      case None =>
-        emptyDF[FrontierRow].withColumn("changed_wave", lit(0L)).limit(0)
-      case Some(log) =>
-        val touched = log.filter($"f_wave" > sinceWave)
-          .select($"fbucket").distinct().collect().map(_.getInt(0)).toSeq
-        if (touched.isEmpty)
-          emptyDF[FrontierRow].withColumn("changed_wave", lit(0L)).limit(0)
-        else {
-          val slice = log.filter($"fbucket".isin(touched: _*))
-          val w = Window.partitionBy("url").orderBy(desc("f_wave"), desc("f_prio"))
-          slice.withColumn("rn_", row_number().over(w))
-            .filter($"rn_" === 1 && $"f_wave" > sinceWave)
-            .withColumn("changed_wave", $"f_wave")
-            .drop("rn_", "f_wave", "f_prio", "fbucket")
-        }
-    }
-
-  /** The committed frontier as of `wave` (time travel over the transition
-    * log: latest-wins re-runs on the historical prefix, so the result is
-    * the exact queue the scheduler saw after that wave's commit). */
-  def frontierViewAsOf(wave: Long): Option[DataFrame] =
-    store.asOf(wave).map { s =>
-      s.readAppendOnly("frontier") match {
-        case None => emptyFrontierDF
-        case Some(raw) => frontierLatestWins(frontierBackfill(raw))
-      }
-    }
-
-  private def urlsMorOver(src: Option[DataFrame],
-      buckets: Option[Seq[Int]]): DataFrame =
-    src match {
-      case None => emptyDF[UrlRow]
-      case Some(df0raw) =>
-        // schema backfill on read: url deltas written before the bucketed
-        // layout have no ubucket column (or parquet schema union reads their
-        // rows as null) — recompute from the url so a resume from a
-        // pre-bucketing snapshot neither fails resolution nor silently
-        // drops pre-upgrade urls from bucket-pruned steady-state waves
-        val df0 =
-          if (df0raw.columns.contains("ubucket"))
-            df0raw.withColumn("ubucket", coalesce($"ubucket", bucketCol($"url")))
-          else df0raw.withColumn("ubucket", bucketCol($"url"))
-        val df = buckets match {
-          case Some(bs) => df0.filter($"ubucket".isin(bs: _*))
-          case None     => df0
-        }
-        val w = Window.partitionBy("url").orderBy(desc("w_wave"), desc("w_prio"))
-        df.withColumn("rn_", row_number().over(w)).filter($"rn_" === 1)
-          .drop("rn_", "w_wave", "w_prio", "ubucket")
-    }
 
   /** links view: first (src,dst) row wins (Read-or-Insert, link.go:47-79). */
   def linksView: DataFrame =
@@ -456,11 +412,6 @@ final class Scheduler(spark: SparkSession, store: TableStore, cfg: CrawlConfig) 
     case _ => 0L
   }
 
-  private def ints(m: Map[String, Any], key: String): Seq[Int] = m.get(key) match {
-    case Some(v: scala.collection.Seq[_]) => v.map(_.asInstanceOf[Int]).toSeq
-    case _ => Nil
-  }
-
   /** Run `body` with the description of every job it submits from this
     * thread set to `desc` (a thread-local Spark property). */
   private def tagged[T](desc: String)(body: => T): T = {
@@ -473,18 +424,18 @@ final class Scheduler(spark: SparkSession, store: TableStore, cfg: CrawlConfig) 
   /** Observed aggregates of the url buckets an array column of urls
     * touches, as bitmasks: mask i has bit b set when bucket 64·i + b is
     * touched. A set of at most `urlBuckets` values, whatever the row count. */
-  private def hrefBucketMasks: Seq[Column] =
+  private def bucketMasks(urls: Column): Seq[Column] =
     (0 until (cfg.urlBuckets + 63) / 64).map { i =>
-      bit_or(aggregate($"hrefs", lit(0L), (acc, u) => {
+      bit_or(aggregate(urls, lit(0L), (acc, u) => {
         val b = bucketCol(u) - 64 * i
         acc.bitwiseOR(when(b >= 0 && b < 64, call_function("shiftleft", lit(1L), b))
           .otherwise(lit(0L)))
-      })).as(s"href_mask_$i")
+      })).as(s"bucket_mask_$i")
     }
 
   private def maskedBuckets(m: Map[String, Any]): Seq[Int] =
     (0 until (cfg.urlBuckets + 63) / 64).flatMap { i =>
-      val mask = long(m, s"href_mask_$i")
+      val mask = long(m, s"bucket_mask_$i")
       (0 until 64).filter(b => ((mask >>> b) & 1L) == 1L).map(_ + 64 * i)
     }
 
@@ -578,14 +529,14 @@ final class Scheduler(spark: SparkSession, store: TableStore, cfg: CrawlConfig) 
     // each consumer's action re-ran the full-log window — ×3 full shuffles
     // per wave at a 10^10-row backlog (round-3 finding #1).
     val (frontier0, queuedCount) = phase("frontier") {
-      val (f, m) = materialize("frontier", frontierDF,
+      val (f, m) = materialize("frontier", frontierView,
         count(when($"state" === StateQueued, 1)).as("queued")) // A10 gauge
       (f, long(m, "queued"))
     }
     // table views: a table's first read in this instance (or after a
     // rewrite) infers its schema from a footer, which is a job
     val (uncrawl0, hostState0, pages) = phase("views") {
-      (uncrawlablesView.select("url"), hostStateDF, pagesDF)
+      (uncrawlablesView.select("url"), hostMor.view(), pagesDF)
     }
 
     // ---- 1. seeding (crawler.go:139-153)
@@ -658,7 +609,7 @@ final class Scheduler(spark: SparkSession, store: TableStore, cfg: CrawlConfig) 
         (urlsFull, long(um, "n"), seeds, long(sm, "n"), createsCk, wl)
       } else phase("views") {
         val wl = store.readLatest("whitelist").getOrElse(Seq.empty[String].toDF("host"))
-        (null, 0L, emptyFrontierDF, 0L, emptyUrlRows, wl)
+        (null, 0L, frontierMor.empty, 0L, urlsMor.empty, wl)
       }
 
     // ---- 2. politeness budget + robots plan (T4/T5)
@@ -754,10 +705,10 @@ final class Scheduler(spark: SparkSession, store: TableStore, cfg: CrawlConfig) 
         .drop("html")
       val (f, m) = materialize("fetch", all, Seq(count(lit(1)).as("taken"),
         count(when($"found", 1)).as("ok"), count(when(isHeadBlocked, 1)).as("blocked"),
-        sum(size($"hrefs")).as("links"), collect_set(bucketCol($"url")).as("buckets")) ++
-        hrefBucketMasks: _*)
+        sum(size($"hrefs")).as("links")) ++
+        bucketMasks(concat(array($"url"), coalesce($"hrefs", array().cast("array<string>")))): _*)
       (f, long(m, "taken"), long(m, "ok"), long(m, "blocked"), long(m, "links"),
-        (ints(m, "buckets") ++ maskedBuckets(m)).distinct.sorted)
+        maskedBuckets(m))
     }
 
     // the extracted links, re-exploded from the fetch checkpoint by each reader
@@ -818,13 +769,12 @@ final class Scheduler(spark: SparkSession, store: TableStore, cfg: CrawlConfig) 
     // the phase (its jobs carry the tag) and the wave owns its RDD.
     val dstNotSeeded = dstFirst
       .join(seedCreates.select($"url".as("dst")), Seq("dst"), "left_anti")
-    // w_prio 1 = created (source roots, link dsts), 2 = fetched update
     val (urlDelta, urlDeltaRows) = phase("url_delta") {
       val dstNew = Scheduler.hashProbeNewUrls(dstNotSeeded, urlsWave.select("url"), wave.own)
       val dstCreates = dstNew.select(newUrlRowCols($"dst", vtTs($"src_vt")): _*)
-      val (d, m) = materialize("url_delta", withMor(seedCreates, w, 1)
-        .unionByName(withMor(updates, w, 2))
-        .unionByName(withMor(dstCreates, w, 1)),
+      val (d, m) = materialize("url_delta", urlsMor.stamp(seedCreates, w, 1)
+        .unionByName(urlsMor.stamp(updates, w, 2))
+        .unionByName(urlsMor.stamp(dstCreates, w, 1)),
         count(lit(1)).as("n"))
       (d, long(m, "n"))
     }
@@ -924,10 +874,10 @@ final class Scheduler(spark: SparkSession, store: TableStore, cfg: CrawlConfig) 
     val takenRows = fetched
       .select($"url", $"method", $"host", $"lane", $"wave", $"seq",
         lit(StateTaken).as("state"), $"prio_score")
-    val frontierAppends = withFrontierMor(seedRows, w, PrioSeed)
-      .unionByName(withFrontierMor(takenRows, w, PrioTaken))
-      .unionByName(withFrontierMor(headBlockedRows, w, PrioBlocked))
-      .unionByName(withFrontierMor(newEnqueues, w, PrioEnqueued))
+    val frontierAppends = frontierMor.stamp(seedRows, w, PrioSeed)
+      .unionByName(frontierMor.stamp(takenRows, w, PrioTaken))
+      .unionByName(frontierMor.stamp(headBlockedRows, w, PrioBlocked))
+      .unionByName(frontierMor.stamp(newEnqueues, w, PrioEnqueued))
 
     // ---- 10. host state
     val takenPerHost = fetched.groupBy($"host", $"lane")
@@ -941,7 +891,7 @@ final class Scheduler(spark: SparkSession, store: TableStore, cfg: CrawlConfig) 
     // hosts) regardless of activity). Untouched hosts' next_fetch_vt is
     // in the past either way; the read side's greatest(start_vt,
     // waveStart) already treats a stale value and a missing row alike.
-    val hostStateTouched = hostPlan
+    val hostStateTouched = hostMor.stamp(hostPlan
       .join(takenPerHost, Seq("host", "lane"), "left")
       .filter($"robots_now" || $"max_vt".isNotNull)
       .withColumn("last_vt",
@@ -949,8 +899,7 @@ final class Scheduler(spark: SparkSession, store: TableStore, cfg: CrawlConfig) 
           .otherwise(coalesce($"max_vt", $"start_vt" - $"eff_delay")))
       .select($"host", $"lane", lit(cfg.polite).as("robots_fetched"),
         $"eff_robots_txt".as("robots_txt"), $"eff_delay".as("crawl_delay_sec"),
-        ($"last_vt" + $"eff_delay").as("next_fetch_vt"))
-      .withColumn("h_wave", lit(w))
+        ($"last_vt" + $"eff_delay").as("next_fetch_vt")), w)
 
     // ---- 11. fetch log (crawl-order artifact, O4)
     val robotsLog = hostPlan.filter($"robots_now").select(lit(w).as("wave"),
@@ -1036,10 +985,7 @@ final class Scheduler(spark: SparkSession, store: TableStore, cfg: CrawlConfig) 
 
   /** Current queued-command count (A10 queue-depth gauge, crawler.go:143). */
   def frontierDepth: Long =
-    frontierDF.filter($"state" === StateQueued).count()
-
-  /** The committed frontier (GET /que view). */
-  def frontierView: DataFrame = frontierDF
+    frontierView.filter($"state" === StateQueued).count()
 
   /** POST /que equivalent (handlers.go:42-108): validate the url against
     * the registered source prefixes — `ValidArchivingUrl`
@@ -1075,15 +1021,14 @@ final class Scheduler(spark: SparkSession, store: TableStore, cfg: CrawlConfig) 
       .toDF("url", "method", "host", "lane", "wave", "seq", "state", "prio_score")
     // enqued-map check (Read-or-Create): only append the queued transition
     // if the url holds no frontier slot — an O(delta) append, not a rewrite
-    val alreadyActive = frontierRowsFor(url).limit(1).count() > 0
+    val alreadyActive = frontierMor.point(url).limit(1).count() > 0
     if (!alreadyActive)
-      store.stageAppend("frontier", withFrontierMor(row, w, PrioSeed))
+      store.stageAppend("frontier", frontierMor.stamp(row, w, PrioSeed))
     // Read-or-Create the url row (handlers.go:83-101)
     val creates = row.select($"url")
-      .join(urlsViewBuckets(Some(Seq(urlBucketOf(url)))).select("url"),
-        Seq("url"), "left_anti")
+      .join(urlsMor.point(url).select("url"), Seq("url"), "left_anti")
       .select(newUrlRowCols($"url", ts): _*)
-    store.stageAppend("urls", withMor(creates, w, 1))
+    store.stageAppend("urls", urlsMor.stamp(creates, w, 1))
     // audit log (archive_requests insert, handlers.go:75)
     store.stageAppend("archive_requests",
       Seq((url, w)).toDF("url", "wave").select($"url", ts.as("created"), $"wave"))
@@ -1107,77 +1052,25 @@ final class Scheduler(spark: SparkSession, store: TableStore, cfg: CrawlConfig) 
     // issued in the same API cycle (round-3 advice: seedUrl-then-
     // markUncrawlable left the url queued and fetchable). PrioEvicted=5
     // outranks every transition runWave(w+1) itself can write.
-    val evicted = frontierRowsFor(url).filter($"state" === StateQueued)
+    val evicted = frontierMor.point(url).filter($"state" === StateQueued)
       .withColumn("state", lit(StateTaken))
-    store.stageAppend("frontier", withFrontierMor(evicted, w + 1, PrioEvicted))
+    store.stageAppend("frontier", frontierMor.stamp(evicted, w + 1, PrioEvicted))
     store.commitWave(w)
   }
 
-  /** Compact MOR tables (Iceberg rewrite_data_files equivalent). The
-    * frontier compaction materializes the live view (queued + blocked; all
-    * taken tombstones fold away) as one wave-stamped version, bounding the
-    * transition-log read amplification on the same cadence as urls. */
+  /** Compact the MOR tables (Iceberg rewrite_data_files equivalent): each
+    * becomes one version of its live winners, bounding the log's read
+    * amplification; the frontier's taken tombstones fold away. */
   def compactTables(): Unit = tagged(s"compact ${store.currentWave}") {
-    // Winner rows keep their ORIGINAL MOR stamps. Re-stamping everything at
-    // the compaction wave (the old behavior) made the CDC readers
-    // (`urlsChangedSince`/`frontierChangedSince`, which filter on
-    // w_wave/f_wave > checkpoint) report the WHOLE table as changed after
-    // every compaction — with compactEvery=8 that collapsed the documented
-    // O(delta) incremental read into a full-table reprocess every 8 waves.
-    // Preserving stamps is latest-wins-safe: later deltas are always
-    // stamped at a strictly higher wave, so they still outrank.
     import TableStore.Delta
     store.stage(Seq(
-      Delta("urls", urlsWinnersStamped.repartition(col("ubucket")), rewrite = true),
+      Delta("urls", urlsMor.compacted, rewrite = true),
       Delta("links", linksView, rewrite = true),
       Delta("snapshots", snapshotsView, rewrite = true),
-      Delta("frontier", frontierWinnersStamped.repartition(col("fbucket")), rewrite = true),
-      Delta("host_state", hostWinnersStamped, rewrite = true)))
+      Delta("frontier", frontierMor.compacted, rewrite = true),
+      Delta("host_state", hostMor.compacted, rewrite = true)))
     store.commitWave(store.currentWave)
   }
-
-  /** urls latest-wins winners WITH their original (w_wave, w_prio, ubucket)
-    * columns — the compaction shape (the live view drops the stamps). */
-  private def urlsWinnersStamped: DataFrame =
-    store.readAppendOnly("urls") match {
-      case None => withMor(emptyDF[UrlRow], store.currentWave, 2).limit(0)
-      case Some(df0raw) =>
-        val withB =
-          if (df0raw.columns.contains("ubucket"))
-            df0raw.withColumn("ubucket", coalesce($"ubucket", bucketCol($"url")))
-          else df0raw.withColumn("ubucket", bucketCol($"url"))
-        val df0 = withB // pre-MOR files read as wave-0 stamps
-          .withColumn("w_wave", coalesce($"w_wave", lit(0L)))
-          .withColumn("w_prio", coalesce($"w_prio", lit(0)))
-        val w = Window.partitionBy("url").orderBy(desc("w_wave"), desc("w_prio"))
-        df0.withColumn("rn_", row_number().over(w)).filter($"rn_" === 1).drop("rn_")
-    }
-
-  /** Frontier latest-wins winners WITH stamps; taken tombstones (and the
-    * urls they supersede) drop out of the compacted log entirely — history
-    * truncation is the point of compaction. */
-  private def frontierWinnersStamped: DataFrame =
-    frontierLog match {
-      case None =>
-        withFrontierMor(emptyFrontierDF, store.currentWave, 0).limit(0)
-      case Some(log) =>
-        val w = Window.partitionBy("url").orderBy(desc("f_wave"), desc("f_prio"))
-        log.withColumn("rn_", row_number().over(w)).filter($"rn_" === 1)
-          .drop("rn_").filter($"state" =!= StateTaken)
-    }
-
-  /** host_state latest-wins winners WITH their h_wave stamp. */
-  private def hostWinnersStamped: DataFrame =
-    store.readAppendOnly("host_state") match {
-      case None => emptyHostStateDF.withColumn("h_wave", lit(0L)).limit(0)
-      case Some(df0raw) =>
-        val df0 =
-          if (df0raw.columns.contains("h_wave"))
-            df0raw.withColumn("h_wave", coalesce($"h_wave", lit(0L)))
-          else df0raw.withColumn("h_wave", lit(0L))
-        val w = Window.partitionBy("host", "lane").orderBy(desc("h_wave"))
-        df0.withColumn("rn_", row_number().over(w)).filter($"rn_" === 1).drop("rn_")
-    }
 
   // -------------------------------------------------------------- helpers
 
@@ -1246,14 +1139,6 @@ final class Scheduler(spark: SparkSession, store: TableStore, cfg: CrawlConfig) 
     array().cast("array<string>").as("headers"),
     map().cast("map<string,string>").as("meta"), lit("").as("hash"))
 
-  private lazy val emptyUrlRows: DataFrame = {
-    import Model._
-    emptyDF[UrlRow]
-  }
-
-  private def withMor(df: DataFrame, w: Long, prio: Int): DataFrame =
-    df.withColumn("w_wave", lit(w)).withColumn("w_prio", lit(prio))
-      .withColumn("ubucket", bucketCol(col("url")))
 }
 
 /** Per-executor robots parse cache keyed by content (P8). Deliberately

@@ -27,12 +27,12 @@ import java.nio.charset.StandardCharsets
   * (north_rule resumability). Append-only tables (snapshots, links, fetch_log,
   * lineage) append a new version containing only the delta and are read as the
   * union of all committed versions (merge-on-read, like Iceberg's append
-  * manifests); small mutable state tables (host_state, whitelist) rewrite.
+  * manifests); small mutable tables (pages, sources, whitelist) rewrite.
   *
-  * The two LARGE state tables — `urls` and `frontier` — are append-mostly
-  * with latest-row-wins merge-on-read (Iceberg MOR equivalent): each wave
-  * appends replacement/transition rows and the read view keeps the latest
-  * row per url. At a 10^10-url frontier this is the layout that scales —
+  * The state tables — `urls`, `frontier` and `host_state` — are
+  * append-mostly with latest-row-wins merge-on-read (Iceberg MOR
+  * equivalent, defined in `Scheduler`): each wave appends replacement or
+  * transition rows and the read view keeps the latest row per key. At a 10^10-url frontier this is the layout that scales —
   * O(delta) write per wave instead of O(state) — with periodic compaction
   * bounding read amplification.
   */
@@ -46,38 +46,17 @@ final class TableStore(spark: SparkSession, rootDir: String) {
 
   private val manifestPath = root.resolve("_manifest.json")
 
+  private val (wave0, committed0) =
+    if (Files.exists(manifestPath)) TableStore.parseManifest(readUtf8(manifestPath))
+    else (-1L, Map.empty[String, Seq[Long]])
+
   /** table -> committed versions (ascending). */
-  @volatile private var committed: Map[String, Seq[Long]] = readManifest()
+  @volatile private var committed: Map[String, Seq[Long]] = committed0
   @volatile private var pendingVersions: Map[String, Seq[Long]] = committed
-  @volatile var currentWave: Long = readWave()
+  @volatile var currentWave: Long = wave0
 
-  private def readManifestJson(): Option[String] =
-    if (Files.exists(manifestPath))
-      Some(new String(Files.readAllBytes(manifestPath), StandardCharsets.UTF_8))
-    else None
-
-  private def readManifest(): Map[String, Seq[Long]] =
-    readManifestJson() match {
-      case None => Map.empty
-      case Some(json) =>
-        // tiny hand-rolled parse of {"wave":N,"tables":{"t":[1,2],...}}
-        val tablesPart = json.split("\"tables\":", 2)
-        if (tablesPart.length < 2) Map.empty
-        else {
-          val entry = "\"([^\"]+)\"\\s*:\\s*\\[([0-9,\\s]*)\\]".r
-          entry.findAllMatchIn(tablesPart(1)).map { m =>
-            val vs = m.group(2).split(",").map(_.trim).filter(_.nonEmpty).map(_.toLong).toSeq
-            m.group(1) -> vs
-          }.toMap
-        }
-    }
-
-  private def readWave(): Long =
-    readManifestJson() match {
-      case None => -1L
-      case Some(json) =>
-        "\"wave\"\\s*:\\s*(-?\\d+)".r.findFirstMatchIn(json).map(_.group(1).toLong).getOrElse(-1L)
-    }
+  private def readUtf8(p: Path): String =
+    new String(Files.readAllBytes(p), StandardCharsets.UTF_8)
 
   def versionPath(table: String, version: Long): String =
     tableDir(table, version).toString
@@ -141,47 +120,48 @@ final class TableStore(spark: SparkSession, rootDir: String) {
     * driver-side file listing + parquet footer/schema work (an Iceberg
     * catalog likewise serves scans from cached manifest metadata). Every
     * action on the cached frame still scans the parquet data itself; only
-    * plan-construction metadata is reused. One entry per table (the live
-    * version list), so memory stays O(tables) over arbitrarily many waves. */
+    * plan-construction metadata is reused. One live and one time-travel
+    * entry per table, so memory stays O(tables) over any number of waves
+    * and a time-travel read never displaces the live plan. */
   private val planCache =
     scala.collection.concurrent.TrieMap.empty[String, (Seq[Long], DataFrame)]
 
-  /** Read the union of all committed versions (append-only tables) as ONE
-    * multi-path scan (one codegen stage regardless of version count).
-    * Bucket-clustered tables (urls) carry their bucket as a data column
-    * clustered per file, so a bucket predicate prunes files/row-groups via
-    * parquet stats without directory-partition discovery. */
-  def readAppendOnly(table: String): Option[DataFrame] = {
-    val versions = committed.getOrElse(table, Nil)
-    if (versions.isEmpty) None
-    else planCache.get(table) match {
-      case Some((vs, df)) if vs == versions => Some(df)
+  /** The read plan of `table` over a version list: the union of all the
+    * versions as ONE multi-path scan (append-only and merge-on-read tables;
+    * one codegen stage regardless of version count), or with `latest` only
+    * the newest (rewrite tables). A latest read does NOT apply the cached
+    * union schema: a rewrite table's schema is by definition its newest
+    * version's, and backfilling legacy columns as nulls would widen it.
+    * Plan-cached per (table, latest, `slot`) over the exact version list.
+    * The live store and its time-travel views share this one read. */
+  private def read(table: String, versions: Seq[Long], latest: Boolean,
+      slot: String = ""): Option[DataFrame] = {
+    val vs = if (latest) versions.lastOption.toSeq else versions
+    val key = (if (latest) s"$table@latest" else table) + slot
+    if (vs.isEmpty) None
+    else planCache.get(key) match {
+      case Some((cached, df)) if cached == vs => Some(df)
       case _ =>
-        val df = tryRead(table, versions.map(v => tableDir(table, v).toString))
-        df.foreach(d => planCache.update(table, (versions, d)))
+        val paths = vs.map(v => tableDir(table, v).toString)
+        val df =
+          if (!latest) tryRead(table, paths)
+          else try Some(spark.read.parquet(paths: _*))
+          catch { case _: org.apache.spark.sql.AnalysisException => None }
+        df.foreach(d => planCache.update(key, (vs, d)))
         df
     }
   }
 
-  /** Read only the newest committed version (rewrite tables). The cached
-    * union schema is NOT applied here: a rewrite table's live schema is by
-    * definition its newest version's, and backfilling legacy columns as
-    * nulls would widen it. Plan-cached like readAppendOnly (key: the
-    * one-version list), immutability argument identical. */
-  def readLatest(table: String): Option[DataFrame] = {
-    val versions = committed.getOrElse(table, Nil)
-    versions.lastOption.flatMap { v =>
-      planCache.get(s"$table@latest") match {
-        case Some((vs, df)) if vs == Seq(v) => Some(df)
-        case _ =>
-          val df =
-            try Some(spark.read.parquet(tableDir(table, v).toString))
-            catch { case _: org.apache.spark.sql.AnalysisException => None }
-          df.foreach(d => planCache.update(s"$table@latest", (Seq(v), d)))
-          df
-      }
-    }
-  }
+  /** Read the union of all committed versions. Bucket-clustered tables
+    * (urls, frontier) carry their bucket as a data column clustered per
+    * file, so a bucket predicate prunes files/row-groups via parquet stats
+    * without directory-partition discovery. */
+  def readAppendOnly(table: String): Option[DataFrame] =
+    read(table, committed.getOrElse(table, Nil), latest = false)
+
+  /** Read only the newest committed version (rewrite tables). */
+  def readLatest(table: String): Option[DataFrame] =
+    read(table, committed.getOrElse(table, Nil), latest = true)
 
   /** Guards pendingVersions read-modify-write: a wave stages independent
     * tables from concurrent driver threads (standard Spark concurrent job
@@ -315,18 +295,7 @@ final class TableStore(spark: SparkSession, rootDir: String) {
   def asOf(wave: Long): Option[SnapshotView] = {
     val p = root.resolve("_snapshots").resolve(f"w$wave%012d.json")
     if (!Files.exists(p)) None
-    else {
-      val json = new String(Files.readAllBytes(p), StandardCharsets.UTF_8)
-      val tablesPart = json.split("\"tables\":", 2)
-      val entry = "\"([^\"]+)\"\\s*:\\s*\\[([0-9,\\s]*)\\]".r
-      val tables =
-        if (tablesPart.length < 2) Map.empty[String, Seq[Long]]
-        else entry.findAllMatchIn(tablesPart(1)).map { m =>
-          m.group(1) -> m.group(2).split(",").map(_.trim)
-            .filter(_.nonEmpty).map(_.toLong).toSeq
-        }.toMap
-      Some(new SnapshotView(wave, tables))
-    }
+    else Some(new SnapshotView(wave, TableStore.parseManifest(readUtf8(p))._2))
   }
 
   /** Expire time-travel history (Iceberg `expire_snapshots`): keep the
@@ -379,16 +348,10 @@ final class TableStore(spark: SparkSession, rootDir: String) {
       val wave: Long, tables: Map[String, Seq[Long]]) {
     private[TableStore] def tableVersions: Map[String, Seq[Long]] = tables
     def exists(table: String): Boolean = tables.get(table).exists(_.nonEmpty)
-    def readAppendOnly(table: String): Option[DataFrame] = {
-      val versions = tables.getOrElse(table, Nil)
-      if (versions.isEmpty) None
-      else tryRead(table, versions.map(v => tableDir(table, v).toString))
-    }
+    def readAppendOnly(table: String): Option[DataFrame] =
+      read(table, tables.getOrElse(table, Nil), latest = false, slot = "@asOf")
     def readLatest(table: String): Option[DataFrame] =
-      tables.getOrElse(table, Nil).lastOption.flatMap { v =>
-        try Some(spark.read.parquet(tableDir(table, v).toString))
-        catch { case _: org.apache.spark.sql.AnalysisException => None }
-      }
+      read(table, tables.getOrElse(table, Nil), latest = true, slot = "@asOf")
   }
 
   /** Drop uncommitted staged state (resume path). */
@@ -396,6 +359,18 @@ final class TableStore(spark: SparkSession, rootDir: String) {
 }
 
 object TableStore {
+
+  /** Parse a manifest, `{"wave":N,"tables":{"t":[1,2],...}}`: its wave (-1
+    * when absent) and each table's version list. */
+  private def parseManifest(json: String): (Long, Map[String, Seq[Long]]) = {
+    val wave = "\"wave\"\\s*:\\s*(-?\\d+)".r.findFirstMatchIn(json)
+      .map(_.group(1).toLong).getOrElse(-1L)
+    val entry = "\"([^\"]+)\"\\s*:\\s*\\[([0-9,\\s]*)\\]".r
+    val tables = json.split("\"tables\":", 2).drop(1).flatMap(entry.findAllMatchIn(_)).map { m =>
+      m.group(1) -> m.group(2).split(",").map(_.trim).filter(_.nonEmpty).map(_.toLong).toSeq
+    }.toMap
+    (wave, tables)
+  }
 
   /** One table delta of a staged batch. `files` caps its output file count
     * (0 keeps the frame's own partitioning, one file per partition); rows

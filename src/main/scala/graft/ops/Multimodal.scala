@@ -17,13 +17,14 @@ import org.apache.spark.sql.functions._
   */
 object Multimodal {
 
-  // ImageIO's default stream cache is a TEMP FILE per decoded image
-  // (FileCacheImageInputStream): every header read / dHash paid a file
-  // create+write+delete. Crawl blobs arrive as in-memory byte arrays, so
-  // the memory-backed stream cache is strictly better — per-row decode cost
-  // becomes pure CPU (guide §1.2 step 2: per-task work). Process-wide,
-  // set once when this object loads on driver or executor.
-  javax.imageio.ImageIO.setUseCache(false)
+  /** A memory-cached image stream over `bytes`. ImageIO's default stream
+    * cache is a TEMP FILE per decoded image (FileCacheImageInputStream),
+    * a file create+write+delete per header read or dHash; crawl blobs are
+    * in-memory byte arrays, so the memory-backed cache is strictly better.
+    * Opened per call, so the process-wide `ImageIO.setUseCache` setting
+    * stays whatever the caller made it. */
+  private def imageStream(bytes: Array[Byte]): javax.imageio.stream.ImageInputStream =
+    new javax.imageio.stream.MemoryCacheImageInputStream(new java.io.ByteArrayInputStream(bytes))
 
   final case class MediaMeta(
       format: String, width: Int, height: Int, duration_ms: Long, n_bytes: Long)
@@ -52,8 +53,7 @@ object Multimodal {
       // corrupt/truncated bytes are the norm in crawled media: a failed
       // header parse degrades to (0,0) dims, never a task failure
       try {
-        val iis = javax.imageio.ImageIO.createImageInputStream(
-          new java.io.ByteArrayInputStream(bytes))
+        val iis = imageStream(bytes)
         try {
           val readers = javax.imageio.ImageIO.getImageReaders(iis)
           if (readers.hasNext) {
@@ -63,7 +63,7 @@ object Multimodal {
               MediaMeta(fmt, r.getWidth(0), r.getHeight(0), 0L, n.toLong)
             } finally r.dispose()
           } else MediaMeta(fmt, 0, 0, 0L, n.toLong) // no JDK codec for this format
-        } finally if (iis != null) iis.close()
+        } finally iis.close()
       } catch {
         case _: java.io.IOException | _: RuntimeException =>
           MediaMeta(fmt, 0, 0, 0L, n.toLong)
@@ -176,8 +176,10 @@ object Multimodal {
   def dHash(bytes: Array[Byte]): java.lang.Long = {
     try {
       if (bytes == null) return null
-      val img = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(bytes))
-      if (img == null) return null
+      // read closes the stream unless no reader claims the bytes
+      val iis = imageStream(bytes)
+      val img = javax.imageio.ImageIO.read(iis)
+      if (img == null) { iis.close(); return null }
       val W = 9; val H = 8
       val w = img.getWidth; val h = img.getHeight
       if (w < 1 || h < 1) return null

@@ -811,6 +811,17 @@ class DHashSpec extends AnyFunSuite {
     bos.toByteArray
   }
 
+  test("decode and dHash leave ImageIO's cache setting as the caller set it") {
+    val img = png(9, 8)((x, _) => x * 20)
+    val prev = javax.imageio.ImageIO.getUseCache
+    try Seq(true, false).foreach { use =>
+      javax.imageio.ImageIO.setUseCache(use)
+      assert(Multimodal.decode(img).width == 9)
+      assert(Multimodal.dHash(img) == -1L)
+      assert(javax.imageio.ImageIO.getUseCache == use)
+    } finally javax.imageio.ImageIO.setUseCache(prev)
+  }
+
   test("closed-form hashes: increasing, decreasing, alternating columns") {
     assert(Multimodal.dHash(png(9, 8)((x, _) => x * 20)) == -1L)
     assert(Multimodal.dHash(png(9, 8)((x, _) => 160 - x * 20)) == 0L)

@@ -157,6 +157,89 @@ class TimeTravelSpec extends AnyFunSuite {
     assert(sched.frontierChangedSince(store.currentWave).count() == 0)
   }
 
+  test("a store written before the stamp and bucket columns reads, crawls and compacts as stamped") {
+    import org.apache.spark.sql.expressions.Window
+    spark.conf.set("spark.sql.shuffle.partitions", "4")
+    val dir = SparkTestBase.tempDir("timetravel_legacy")
+    def open(): (Scheduler, TableStore) = {
+      val st = new TableStore(spark, dir)
+      (new Scheduler(spark, st, CrawlConfig()), st)
+    }
+    // test-side latest-wins over a raw log: unstamped rows sort last
+    def latest(raw: org.apache.spark.sql.DataFrame, key: Seq[String],
+        stamps: Seq[String], drop: Seq[String]) =
+      raw.withColumn("rn_", row_number().over(Window.partitionBy(key.map(col): _*)
+        .orderBy(stamps.map(c => col(c).desc_nulls_last): _*)))
+        .filter($"rn_" === 1).drop("rn_" +: drop: _*)
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.select(to_json(struct(df.columns.sorted.map(col): _*))).as[String].collect().sorted.toSeq
+    val (s0, st0) = open()
+    s0.bootstrap(
+      Fixtures.pagesDF(spark, Fixtures.staticSitePages),
+      Fixtures.sourcesDF(spark, Fixtures.staticSiteSources))
+    s0.run(maxWaves = 2)
+    // rewrite the three state tables once as live rows only, the way a
+    // store written before the stamp and bucket columns holds them
+    val hostLive = latest(st0.readAppendOnly("host_state").get, Seq("host", "lane"),
+      Seq("h_wave"), Seq("h_wave"))
+    val legacy = Seq(
+      ("urls", st0.stageRewrite("urls", s0.urlsView), "ubucket"),
+      ("frontier", st0.stageRewrite("frontier", s0.frontierView), "fbucket"),
+      ("host_state", st0.stageRewrite("host_state", hostLive), "h_wave"))
+    st0.commitWave(st0.currentWave)
+    val mid = st0.currentWave
+    legacy.foreach { case (t, v, c) =>
+      assert(!spark.read.parquet(st0.versionPath(t, v)).columns.contains(c), s"$t kept $c")
+    }
+    val (sched, store) = open() // an upgraded deployment reopens the store
+    sched.run(maxWaves = 4)
+    assert(store.currentWave == mid + 2)
+
+    // the live views are latest-wins over the mixed log
+    val urlsLog = store.readAppendOnly("urls").get
+    assert(rows(sched.urlsView) == rows(latest(urlsLog, Seq("url"),
+      Seq("w_wave", "w_prio"), Seq("w_wave", "w_prio", "ubucket"))))
+    assert(rows(sched.frontierView) == rows(latest(store.readAppendOnly("frontier").get,
+      Seq("url"), Seq("f_wave", "f_prio"), Seq("f_wave", "f_prio", "fbucket"))
+      .filter($"state" =!= "taken")))
+    // and the crawl went on exactly as an uninterrupted one
+    val (plain, _) = crawl(maxWaves = 4)
+    assert(rows(sched.urlsView) == rows(plain.urlsView))
+    assert(rows(sched.frontierView) == rows(plain.frontierView))
+    assert(rows(sched.fetchLogView) == rows(plain.fetchLogView))
+
+    // CDC: every url has changed since -1, unstamped winners included,
+    // before and after a compaction that leaves the views as they were
+    val before = (rows(sched.urlsView), rows(sched.frontierView))
+    assert(sched.urlsChangedSince(-1L).count() == sched.urlsView.count())
+    sched.compactTables()
+    assert(sched.urlsChangedSince(-1L).count() == sched.urlsView.count())
+    assert((rows(sched.urlsView), rows(sched.frontierView)) == before)
+
+    // the CDC bucket discovery filters the raw stamp, so the predicate
+    // reaches the parquet scan of both tables
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution, d: Long): Unit =
+        plans.add(qe.executedPlan.toString)
+      def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try Seq("w_wave" -> (() => sched.urlsChangedSince(mid)),
+        "f_wave" -> (() => sched.frontierChangedSince(mid))).foreach { case (stamp, cdc) =>
+      plans.clear()
+      assert(cdc().count() > 0)
+      val pushed = s"PushedFilters: \\[[^\\]]*GreaterThan\\($stamp,$mid\\)".r
+      // listeners are called on the listener bus, after the action returns
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      def seen = { import scala.jdk.CollectionConverters._
+        plans.asScala.exists(pushed.findFirstIn(_).isDefined) }
+      while (!seen && System.nanoTime() < deadline) Thread.sleep(50)
+      assert(seen, s"no parquet scan pushes $stamp > $mid")
+    } finally spark.listenerManager.unregister(listener)
+  }
+
   test("expireSnapshots keeps the newest N, drops the rest, live reads survive") {
     val (sched, store) = crawl(maxWaves = 40)
     val before = store.snapshotWaves
