@@ -1,8 +1,11 @@
 package graft.crawl
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import scala.collection.immutable.ListMap
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
 import graft.functions.{Funcs, GoUrl}
@@ -169,23 +172,12 @@ final class Scheduler(spark: SparkSession, store: TableStore, cfg: CrawlConfig) 
   private def bucketCol(c: Column): Column =
     pmod(xxhash64(c), lit(cfg.urlBuckets)).cast("int")
 
-  /** xxhash64 bucket of one url, computed driver-side by EVALUATING the
-    * same Catalyst expression `bucketCol` builds (XxHash64 seed 42 +
-    * floor-mod) — no Spark job. The old spelling ran a 1-row job per
-    * admin point-lookup, which put a full scheduler round-trip in the
-    * seedUrl/markUncrawlable hot path; expression eval is identical by
-    * construction (it IS the executor-side code path) and parity is
-    * additionally pinned by MutationsSpec/ApiCrawlSpec reading back
-    * through the bucket-pruned views. */
-  private def urlBucketOf(url: String): Int = {
-    import org.apache.spark.sql.catalyst.expressions.{Literal, Pmod, XxHash64, Cast}
-    import org.apache.spark.sql.types.IntegerType
-    val h = XxHash64(Seq(Literal.create(url,
-      org.apache.spark.sql.types.StringType)), 42L)
-    val b = Cast(Pmod(h, Literal.create(cfg.urlBuckets.toLong,
-      org.apache.spark.sql.types.LongType)), IntegerType)
-    b.eval(null).asInstanceOf[Int]
-  }
+  /** The row a latest-wins window keeps among one key's `Mor.pointLog`
+    * rows (the greatest `stamps_`, compared in order), if it is live. */
+  private def newestLive(rows: Seq[Row]): Option[Row] =
+    rows.maxOption(Ordering.by((r: Row) => r.getAs[scala.collection.Seq[Long]]("stamps_"))(
+      Ordering.Implicits.seqOrdering[scala.collection.Seq, Long]))
+      .filter(_.getAs[Boolean]("live_"))
 
   /** A merge-on-read table (Iceberg MOR equivalent): every write APPENDS
     * rows stamped with their wave and a priority within it, never
@@ -204,10 +196,10 @@ final class Scheduler(spark: SparkSession, store: TableStore, cfg: CrawlConfig) 
     *
     * A bucketed table keeps `bucket` = xxhash64(url) mod urlBuckets as a
     * data column, sorted inside each file at write time. Latest-wins per
-    * url commutes with a filter on the url or its bucket, so slice and
-    * point reads filter the log BEFORE the window, and parquet stats skip
-    * the other buckets' row groups: a wave that touches k urls reads
-    * O(k/B · table) rows, not O(table). */
+    * url commutes with a filter on the url or its bucket, so slice reads
+    * filter the log BEFORE the window, and parquet stats skip the other
+    * buckets' row groups: a wave that touches k urls reads O(k/B · table)
+    * rows, not O(table). Point reads (`rows`) need no window at all. */
   private final class Mor(table: String, key: Seq[String], stamps: Seq[String],
       bucket: Option[String], defaults: Seq[(String, Column)], live: Column,
       emptyRows: => DataFrame) {
@@ -220,40 +212,115 @@ final class Scheduler(spark: SparkSession, store: TableStore, cfg: CrawlConfig) 
       stamps.zip(Seq(lit(wave), lit(prio))) ++ bucket.map(_ -> bucketCol(col("url")))
 
     private def backfill(raw: DataFrame): DataFrame =
-      (stampCols(0L, 0) ++ defaults).foldLeft(raw) { case (df, (c, d)) =>
-        df.withColumn(c, if (df.columns.contains(c)) coalesce(col(c), d) else d)
-      }
+      raw.withColumns(ListMap((stampCols(0L, 0) ++ defaults).map { case (c, d) =>
+        c -> (if (raw.columns.contains(c)) coalesce(col(c), d) else d)
+      }: _*))
 
-    /** The newest row per key, stamps kept. */
-    private def winners(log: DataFrame): DataFrame =
+    /** The newest row per key that passes `keep`, stamps kept. */
+    private def winners(log: DataFrame, keep: Column = lit(true)): DataFrame =
       log.withColumn("rn_", row_number().over(
         Window.partitionBy(key.map(col): _*).orderBy(stamps.map(desc): _*)))
-        .filter(col("rn_") === 1).drop("rn_")
+        .filter(col("rn_") === 1 && keep).drop("rn_")
+
+    private def liveOf(log: DataFrame): DataFrame =
+      winners(log, live).drop(stamps ++ bucket: _*)
 
     private def bucketIn(bs: Seq[Int]): DataFrame => DataFrame =
       _.filter(col(bucket.get).isin(bs: _*))
 
-    /** The live view over `src` (None: no such table), `slice` applied to
-      * the log before the window. */
-    def view(src: Option[DataFrame] = store.readAppendOnly(table),
-        slice: DataFrame => DataFrame = identity): DataFrame =
-      src.fold(empty)(raw =>
-        winners(slice(backfill(raw))).filter(live).drop(stamps ++ bucket: _*))
+    /** The backfilled log and the live view over one raw frame, each
+      * analyzed once, on first use. */
+    private final class Built(val raw: DataFrame) {
+      lazy val log: DataFrame = backfill(raw)
+      lazy val view: DataFrame = liveOf(log)
+    }
 
-    def buckets(bs: Seq[Int]): DataFrame = view(slice = bucketIn(bs))
+    /** The store serves one raw frame per committed version list and union
+      * schema, so the frames built over the last one are kept, keyed on its
+      * identity: reads of an unchanged table pay no Dataset analysis. An
+      * atomic swap, because the wave pool reads views concurrently. */
+    private val last = new java.util.concurrent.atomic.AtomicReference[Built]()
 
-    def point(url: String): DataFrame =
-      view(slice = bucketIn(Seq(urlBucketOf(url))).andThen(_.filter(col("url") === url)))
+    private def built(raw: DataFrame): Built = {
+      val b = last.get
+      if (b != null && (b.raw eq raw)) b
+      else { val nb = new Built(raw); last.set(nb); nb }
+    }
+
+    /** The live view: the newest live row per key. */
+    def view: DataFrame = store.readAppendOnly(table).fold(empty)(built(_).view)
+
+    /** The live view of the keys `slice` keeps, applied to the log before
+      * the window (latest-wins per key commutes with a filter on the key). */
+    def sliced(slice: DataFrame => DataFrame): DataFrame =
+      store.readAppendOnly(table).fold(empty)(raw => liveOf(slice(built(raw).log)))
+
+    def buckets(bs: Seq[Int]): DataFrame = sliced(bucketIn(bs))
+
+    /** The log rows `urlPredicate` (a predicate on the url alone) keeps,
+      * unwindowed. Each carries its stamps as `stamps_` and its `live` value
+      * as `live_`, which is all `newestLive` needs to pick the row the
+      * window keeps. */
+    private def logWhere(urlPredicate: Column): DataFrame =
+      store.readAppendOnly(table).fold(backfill(empty))(built(_).log)
+        .filter(urlPredicate)
+        .withColumns(ListMap("stamps_" -> array(stamps.map(col(_).cast("long")): _*),
+          "live_" -> live))
+
+    /** The log rows of `urls` (`logWhere`): one per write of a url, so a
+      * handful each. The url predicate is pushed into the parquet scan. */
+    def pointLog(urls: Seq[String]): DataFrame = logWhere(col("url").isin(urls: _*))
+
+    /** The live rows of `urls`, one per entry (a url listed twice answers
+      * twice; one with no live row, never), as a local frame of the view's
+      * columns: one job collects their log rows and the newest of each url
+      * wins on the driver, so the read plans no window and no exchange. */
+    def rows(urls: Seq[String]): DataFrame = {
+      val log = pointLog(urls)
+      val cols = log.columns.filterNot((stamps ++ bucket ++ Seq("stamps_", "live_")).contains)
+      val newest = log.collect().toSeq.groupBy(_.getAs[String]("url"))
+        .flatMap { case (u, rs) => newestLive(rs).map(u -> _) }
+      val out = urls.flatMap(newest.get).map(r => Row.fromSeq(cols.map(r.getAs[Any])))
+      spark.createDataFrame(out.asJava, StructType(cols.map(log.schema(_))))
+    }
+
+    /** The live rows, as `cols`, of the first `n` urls in url order among
+      * those `urlPredicate` (a predicate on the url alone) keeps, as a local
+      * frame: one top-k read of the matching log rows ordered by url, with
+      * no exchange. A url's rows are adjacent in that order, so a prefix
+      * that runs past its `n`-th live url holds the first `n` whole; a
+      * prefix that stops short is read again, four times longer. */
+    def firstRows(urlPredicate: Column, n: Int, cols: Seq[String]): DataFrame = {
+      val log = logWhere(urlPredicate)
+        .select((("url" +: cols).distinct ++ Seq("stamps_", "live_")).map(col): _*)
+      def read(k: Int): Seq[Row] = {
+        val rows = log.orderBy("url").limit(k).collect().toSeq
+        val byUrl = rows.foldLeft(Vector.empty[Vector[Row]]) { (acc, r) =>
+          if (acc.nonEmpty && acc.last.head.getAs[String]("url") == r.getAs[String]("url"))
+            acc.init :+ (acc.last :+ r)
+          else acc :+ Vector(r)
+        }
+        val newest = byUrl.flatMap(newestLive)
+        // a full prefix may end inside a url's rows: that url is not whole
+        val whole = if (rows.length < k) newest
+          else newest.filterNot(_.getAs[String]("url") == rows.last.getAs[String]("url"))
+        if (whole.length >= n || rows.length < k) whole.take(n)
+        else read(math.min(k.toLong * 4, Int.MaxValue).toInt)
+      }
+      val out = read(math.max(4 * n, 1)).map(r => Row.fromSeq(cols.map(r.getAs[Any])))
+      spark.createDataFrame(out.asJava, StructType(cols.map(log.schema(_))))
+    }
 
     /** Time travel (Iceberg VERSION AS OF): the live view over the version
       * list committed at `wave`; None if `wave` was never committed or
-      * predates the snapshot log. */
+      * predates the snapshot log. Not kept: it would displace the live
+      * view's frames. */
     def asOf(wave: Long): Option[DataFrame] =
-      store.asOf(wave).map(s => view(s.readAppendOnly(table)))
+      store.asOf(wave).map(_.readAppendOnly(table).fold(empty)(raw => new Built(raw).view))
 
     /** The write side: `df`'s rows stamped at (`wave`, `prio`), bucketed. */
     def stamp(df: DataFrame, wave: Long, prio: Int = 0): DataFrame =
-      stampCols(wave, prio).foldLeft(df) { case (d, (c, v)) => d.withColumn(c, v) }
+      df.withColumns(ListMap(stampCols(wave, prio): _*))
 
     /** Incremental CDC read (Iceberg incremental-scan shape): every key
       * whose newest row is stamped after `since`, as that row (`live` not
@@ -278,7 +345,7 @@ final class Scheduler(spark: SparkSession, store: TableStore, cfg: CrawlConfig) 
               case Seq() => None
               case bs => Some(bucketIn(bs))
             }
-        slice.fold(none)(s => winners(s(backfill(raw))).filter(col(wave) > since)
+        slice.fold(none)(s => winners(s(built(raw).log), col(wave) > since)
           .withColumn("changed_wave", col(wave)).drop(stamps ++ bucket: _*))
       }
     }
@@ -293,7 +360,7 @@ final class Scheduler(spark: SparkSession, store: TableStore, cfg: CrawlConfig) 
       * point of compaction. */
     def compacted: DataFrame = {
       val rows = store.readAppendOnly(table)
-        .fold(backfill(empty))(raw => winners(backfill(raw)).filter(live))
+        .fold(backfill(empty))(raw => winners(built(raw).log, live))
       bucket.fold(rows)(b => rows.repartition(col(b)))
     }
   }
@@ -317,11 +384,21 @@ final class Scheduler(spark: SparkSession, store: TableStore, cfg: CrawlConfig) 
     None, Nil, lit(true), emptyDF[HostStateRow])
 
   /** The urls live view: the newest row per url. */
-  def urlsView: DataFrame = urlsMor.view()
+  def urlsView: DataFrame = urlsMor.view
 
   /** The urls live view of the given buckets only (all of them for None). */
   def urlsViewBuckets(buckets: Option[Seq[Int]]): DataFrame =
     buckets.fold(urlsView)(urlsMor.buckets)
+
+  /** The live row of each url of `urls`, read now as a local frame (one
+    * job, no window): GET /urls/<url> and the link docs. */
+  def urlRows(urls: Seq[String]): DataFrame = urlsMor.rows(urls)
+
+  /** The live rows, as `cols`, of the first `n` urls in url order that
+    * `urlPredicate` (a predicate on the `url` column alone) keeps, read now
+    * as a local frame: one top-k job, no window. */
+  def firstUrlRows(urlPredicate: Column, n: Int, cols: Seq[String]): DataFrame =
+    urlsMor.firstRows(urlPredicate, n, cols)
 
   /** The urls live view as committed at `wave`. */
   def urlsViewAsOf(wave: Long): Option[DataFrame] = urlsMor.asOf(wave)
@@ -339,7 +416,7 @@ final class Scheduler(spark: SparkSession, store: TableStore, cfg: CrawlConfig) 
     * checkpointed frame, so the transition log is scanned and
     * latest-wins-shuffled once per wave, not once per consumer. Point
     * lookups (`seedUrl`, `markUncrawlable`) never touch the full view. */
-  def frontierView: DataFrame = frontierMor.view()
+  def frontierView: DataFrame = frontierMor.view
 
   /** The frontier as committed at `wave`: the exact queue the scheduler
     * saw after that wave's commit. */
@@ -374,8 +451,9 @@ final class Scheduler(spark: SparkSession, store: TableStore, cfg: CrawlConfig) 
     store.readAppendOnly("lineage").getOrElse(emptyDF[LineageRow])
   /** The manual don't-crawl list (core/queries.go:729-751). */
   def uncrawlablesView: DataFrame =
-    store.readAppendOnly("uncrawlables")
-      .getOrElse(Seq.empty[(String, java.sql.Timestamp)].toDF("url", "created"))
+    store.readAppendOnly("uncrawlables").getOrElse(noUncrawlables)
+  private lazy val noUncrawlables =
+    Seq.empty[(String, java.sql.Timestamp)].toDF("url", "created")
   def pagesDF: DataFrame = store.readLatest("pages").get
   /** sources catalog; pre-soft-delete snapshots are read as deleted=false
     * (schema backfill on read, same policy as the urls ubucket migration). */
@@ -414,7 +492,7 @@ final class Scheduler(spark: SparkSession, store: TableStore, cfg: CrawlConfig) 
 
   /** Run `body` with the description of every job it submits from this
     * thread set to `desc` (a thread-local Spark property). */
-  private def tagged[T](desc: String)(body: => T): T = {
+  private[crawl] def tagged[T](desc: String)(body: => T): T = {
     val sc = spark.sparkContext
     val prev = sc.getLocalProperty("spark.job.description")
     sc.setJobDescription(desc)
@@ -536,7 +614,7 @@ final class Scheduler(spark: SparkSession, store: TableStore, cfg: CrawlConfig) 
     // table views: a table's first read in this instance (or after a
     // rewrite) infers its schema from a footer, which is a job
     val (uncrawl0, hostState0, pages) = phase("views") {
-      (uncrawlablesView.select("url"), hostMor.view(), pagesDF)
+      (uncrawlablesView.select("url"), hostMor.view, pagesDF)
     }
 
     // ---- 1. seeding (crawler.go:139-153)
@@ -642,7 +720,10 @@ final class Scheduler(spark: SparkSession, store: TableStore, cfg: CrawlConfig) 
         .withColumn("robots_url", when($"robots_now",
           concat(coalesce(nullif(Funcs.schemeUdf($"first_url"), lit("")), lit("http")),
             lit("://"), $"host", lit("/robots.txt"))))
-        .join(pages.select($"url".as("robots_url"), $"html".as("robots_body")),
+        // every robots_url ends in /robots.txt: only those pages can match,
+        // so the broadcast side is the robots pages, not the page table
+        .join(pages.filter($"url".endsWith("/robots.txt"))
+          .select($"url".as("robots_url"), $"html".as("robots_body")),
           Seq("robots_url"), "left")
         .withColumn("new_robots_txt",
           when($"robots_body".isNotNull, decode($"robots_body", "UTF-8")).otherwise(lit("")))
@@ -998,52 +1079,72 @@ final class Scheduler(spark: SparkSession, store: TableStore, cfg: CrawlConfig) 
     * (handlers.go:69-75) — when the url is inside no registered prefix.
     * Soft-deleted sources do not validate (engine policy consistent with
     * P9; the reference's legacy `suburls` table predates its soft-delete
-    * column). All reads are point lookups: the frontier check prunes to
-    * one fbucket, the urls check to one ubucket. */
-  def seedUrl(url: String): Boolean = {
+    * column).
+    *
+    * Two jobs, tagged `api seedUrl`: one collect answers the four gates
+    * (source prefix, uncrawlable, frontier slot, url row), its frontier and
+    * urls branches reading the url's log rows for `newestLive` to resolve,
+    * and one write stages the frontier, urls and archive_requests deltas,
+    * leaving out a delta with no rows. */
+  def seedUrl(url: String): Boolean = tagged("api seedUrl") {
     store.resetPending()
     val w = store.currentWave + 1
-    val valid = !sourcesDF
-      .filter(!coalesce($"deleted", lit(false)) && length($"url") > 0 &&
-        lower(lit(url)).contains(lower($"url")))
-      .isEmpty
-    if (!valid) return false
-    // uncrawlables gate, same invariant as the wave seeder's anti-join:
-    // a manually-blocked url must never re-enter the frontier, including
-    // via POST /que. Without this, a seed AFTER markUncrawlable would
-    // append a queued transition at a higher f_wave that outranks the
-    // eviction tombstone and the url would be fetched again. (Deleting
-    // the uncrawlable row un-blocks the url — MutationsSpec.)
-    if (!uncrawlablesView.filter($"url" === url).isEmpty) return false
-    val ts = timestamp_seconds(lit(baseEpochSec + (w * cfg.waveWindowSec).toLong))
-    val row = Seq((url, "GET", GoUrl.hostOf(url), "C", w,
-        w * SeqStride + (1L << 20), StateQueued, NeverFetchedScore))
-      .toDF("url", "method", "host", "lane", "wave", "seq", "state", "prio_score")
-    // enqued-map check (Read-or-Create): only append the queued transition
-    // if the url holds no frontier slot — an O(delta) append, not a rewrite
-    val alreadyActive = frontierMor.point(url).limit(1).count() > 0
-    if (!alreadyActive)
-      store.stageAppend("frontier", frontierMor.stamp(row, w, PrioSeed))
-    // Read-or-Create the url row (handlers.go:83-101)
-    val creates = row.select($"url")
-      .join(urlsMor.point(url).select("url"), Seq("url"), "left_anti")
-      .select(newUrlRowCols($"url", ts): _*)
-    store.stageAppend("urls", urlsMor.stamp(creates, w, 1))
-    // audit log (archive_requests insert, handlers.go:75)
-    store.stageAppend("archive_requests",
-      Seq((url, w)).toDF("url", "wave").select($"url", ts.as("created"), $"wave"))
-    store.commitWave(store.currentWave)
-    true
+    def gate(name: String, df: DataFrame) =
+      df.select(lit(name).as("gate"), typedLit(Seq.empty[Long]).as("stamps_"), lit(true).as("live_"))
+    def newest(name: String, mor: Mor) =
+      mor.pointLog(Seq(url)).select(lit(name).as("gate"), col("stamps_"), col("live_"))
+    val gates = Seq(
+      gate("source", sourcesDF.filter(!coalesce($"deleted", lit(false)) &&
+        length($"url") > 0 && Funcs.foldCase(lit(url)).contains(Funcs.foldCase($"url")))),
+      // uncrawlables gate, same invariant as the wave seeder's anti-join: a
+      // manually-blocked url never re-enters the frontier, including via
+      // POST /que — a seed after markUncrawlable would append a queued
+      // transition at a higher f_wave that outranks the eviction tombstone.
+      // (Deleting the uncrawlable row un-blocks the url — MutationsSpec.)
+      gate("uncrawlable", uncrawlablesView.filter($"url" === url)),
+      // enqued-map check: the url already holds a frontier slot
+      newest("slot", frontierMor),
+      // Read-or-Create the url row (handlers.go:83-101)
+      newest("url", urlsMor)
+    ).reduce(_ union _).collect().toSeq.groupBy(_.getString(0))
+    def holds(name: String) = gates.get(name).flatMap(newestLive).nonEmpty
+    val accepted = holds("source") && !holds("uncrawlable")
+    if (accepted) {
+      import TableStore.Delta
+      val ts = timestamp_seconds(lit(baseEpochSec + (w * cfg.waveWindowSec).toLong))
+      val slot = localRow(
+        "url" -> url, "method" -> "GET", "host" -> GoUrl.hostOf(url), "lane" -> "C",
+        "wave" -> w, "seq" -> (w * SeqStride + (1L << 20)), "state" -> StateQueued,
+        "prio_score" -> NeverFetchedScore)
+      val deltas = Seq(
+        (!holds("slot"), Delta("frontier", frontierMor.stamp(slot, w, PrioSeed))),
+        (!holds("url"), Delta("urls",
+          urlsMor.stamp(slot.select(newUrlRowCols($"url", ts): _*), w, 1))),
+        // audit log (archive_requests insert, handlers.go:75)
+        (true, Delta("archive_requests", slot.select($"url", ts.as("created"), $"wave"))))
+      store.stage(deltas.collect { case (true, d) => d })
+      store.commitWave(store.currentWave)
+    }
+    accepted
   }
 
+  /** A one-row local frame of string and long columns. (A tuple's `toDF`
+    * derives its encoder by runtime reflection on every call.) */
+  private def localRow(cells: (String, Any)*): DataFrame =
+    spark.createDataFrame(java.util.List.of(Row.fromSeq(cells.map(_._2))),
+      StructType(cells.map { case (name, v) =>
+        if (v.isInstanceOf[String]) StructField(name, StringType)
+        else StructField(name, LongType, nullable = false) }))
+
   /** POST /uncrawlables twin (UncrawlableHandler): record a manual
-    * don't-crawl url and evict it from the queued frontier. */
-  def markUncrawlable(url: String): Unit = {
+    * don't-crawl url and evict it from the queued frontier. Two jobs,
+    * tagged `api markUncrawlable`: the frontier point read, then one write
+    * of the uncrawlables row and the eviction. */
+  def markUncrawlable(url: String): Unit = tagged("api markUncrawlable") {
+    import TableStore.Delta
     store.resetPending()
     val w = store.currentWave
     val ts = timestamp_seconds(lit(baseEpochSec + ((w + 1) * cfg.waveWindowSec).toLong))
-    store.stageAppend("uncrawlables",
-      Seq(Tuple1(url)).toDF("url").select($"url", ts.as("created")))
     // evict a queued command via a MOR tombstone (blocked rows keep their
     // state; the uncrawlables gate already blocks re-enqueue either way).
     // The eviction is STAMPED AT WAVE w+1: seedUrl and runWave stamp their
@@ -1052,9 +1153,11 @@ final class Scheduler(spark: SparkSession, store: TableStore, cfg: CrawlConfig) 
     // issued in the same API cycle (round-3 advice: seedUrl-then-
     // markUncrawlable left the url queued and fetchable). PrioEvicted=5
     // outranks every transition runWave(w+1) itself can write.
-    val evicted = frontierMor.point(url).filter($"state" === StateQueued)
+    val evicted = frontierMor.rows(Seq(url)).filter($"state" === StateQueued)
       .withColumn("state", lit(StateTaken))
-    store.stageAppend("frontier", frontierMor.stamp(evicted, w + 1, PrioEvicted))
+    store.stage(Seq(
+      Delta("uncrawlables", localRow("url" -> url).select($"url", ts.as("created"))),
+      Delta("frontier", frontierMor.stamp(evicted, w + 1, PrioEvicted))))
     store.commitWave(w)
   }
 

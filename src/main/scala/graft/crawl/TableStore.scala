@@ -114,17 +114,19 @@ final class TableStore(spark: SparkSession, rootDir: String) {
     }
 
   /** Per-table cache of the last-built read plan, keyed by the exact
-    * version list it was built over. Version directories are IMMUTABLE
-    * (commits only add new ones), so a DataFrame built over a given version
-    * list stays valid forever — re-building it per read only repeats the
-    * driver-side file listing + parquet footer/schema work (an Iceberg
+    * version list it was built over and the union schema it was read with.
+    * Version directories are IMMUTABLE (commits only add new ones), so a
+    * DataFrame built over a given version list stays valid until a staged
+    * write widens the table's schema — re-building it per read only repeats
+    * the driver-side file listing + parquet footer/schema work (an Iceberg
     * catalog likewise serves scans from cached manifest metadata). Every
     * action on the cached frame still scans the parquet data itself; only
-    * plan-construction metadata is reused. One live and one time-travel
+    * plan-construction metadata is reused, and callers may key their own
+    * derived plans on the frame's identity. One live and one time-travel
     * entry per table, so memory stays O(tables) over any number of waves
     * and a time-travel read never displaces the live plan. */
-  private val planCache =
-    scala.collection.concurrent.TrieMap.empty[String, (Seq[Long], DataFrame)]
+  private val planCache = scala.collection.concurrent.TrieMap.empty[String,
+    (Seq[Long], Option[StructType], DataFrame)]
 
   /** The read plan of `table` over a version list: the union of all the
     * versions as ONE multi-path scan (append-only and merge-on-read tables;
@@ -132,22 +134,25 @@ final class TableStore(spark: SparkSession, rootDir: String) {
     * the newest (rewrite tables). A latest read does NOT apply the cached
     * union schema: a rewrite table's schema is by definition its newest
     * version's, and backfilling legacy columns as nulls would widen it.
-    * Plan-cached per (table, latest, `slot`) over the exact version list.
-    * The live store and its time-travel views share this one read. */
+    * Plan-cached per (table, latest, `slot`) over the exact version list
+    * and, for a union read, the union schema. The live store and its
+    * time-travel views share this one read. */
   private def read(table: String, versions: Seq[Long], latest: Boolean,
       slot: String = ""): Option[DataFrame] = {
     val vs = if (latest) versions.lastOption.toSeq else versions
     val key = (if (latest) s"$table@latest" else table) + slot
+    def schema = if (latest) None else unionSchema.get(table)
     if (vs.isEmpty) None
     else planCache.get(key) match {
-      case Some((cached, df)) if cached == vs => Some(df)
+      case Some((cached, s, df)) if cached == vs && s == schema => Some(df)
       case _ =>
         val paths = vs.map(v => tableDir(table, v).toString)
         val df =
           if (!latest) tryRead(table, paths)
           else try Some(spark.read.parquet(paths: _*))
           catch { case _: org.apache.spark.sql.AnalysisException => None }
-        df.foreach(d => planCache.update(key, (vs, d)))
+        // keyed on the schema the read left cached: a first read seeds it
+        df.foreach(d => planCache.update(key, (vs, schema, d)))
         df
     }
   }

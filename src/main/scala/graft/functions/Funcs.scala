@@ -12,6 +12,20 @@ import org.apache.spark.sql.functions._
   */
 object Funcs {
 
+  /** Spark's `lower`, row for row, without its start-up cost on ASCII rows.
+    * Spark 4.1's `lower` calls `CollationAwareUTF8String`, whose static
+    * initializer runs ICU (about a second, once per JVM); for an all-ASCII
+    * string it then returns the A-Z -> a-z byte mapping. This computes that
+    * mapping with `translate` after an exact ASCII test (a string decodes
+    * to ASCII characters only if every byte is below 0x80; an invalid byte
+    * decodes as U+FFFD) and leaves every other row to `lower`. Locale-free,
+    * unlike `String.toLowerCase()`. */
+  def foldCase(c: Column): Column =
+    when(!c.rlike("[^\\x00-\\x7F]"), translate(c, AsciiUpper, AsciiUpper.toLowerCase(java.util.Locale.ROOT)))
+      .otherwise(lower(c))
+
+  private val AsciiUpper = "ABCDEFGHIJKLMNOPQRSTUVWXYZ"
+
   /** F6: sha256 multihash of a binary column — pure built-ins (codegen'd). */
   def multihash(c: Column): Column = concat(lit("1220"), sha2(c, 256))
 

@@ -26,33 +26,11 @@ class WaveJobsSpec extends AnyFunSuite {
     s
   }
 
-  /** Job descriptions of the jobs that start while `body` runs. */
-  private def jobsDuring(body: => Unit): Seq[String] = {
-    val descs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        descs.add(Option(e.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse(""))
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      body
-      // listener events dispatch asynchronously — wait for the bus to drain
-      val deadline = System.nanoTime() + 15e9.toLong
-      var last = -1
-      while (System.nanoTime() < deadline && descs.size != last) {
-        last = descs.size; Thread.sleep(500)
-      }
-    } finally spark.sparkContext.removeSparkListener(listener)
-    import scala.jdk.CollectionConverters._
-    descs.asScala.toSeq
-  }
-
   test("every wave job is tagged with its phase; a wave runs at most 45 jobs") {
     val s = scheduler("wave-jobs")
     val WaveTag = "wave (\\d+) (\\w+)".r
     (0L to 3L).foreach { w =>
-      val descs = jobsDuring(s.runWave(w))
+      val descs = SparkTestBase.jobsDuring(s.runWave(w))
       val untagged = descs.filterNot(_.startsWith(s"wave $w "))
       assert(untagged.isEmpty, s"wave $w ran jobs without its tag: $untagged")
       val phases = descs.collect { case WaveTag(_, p) => p }.distinct
